@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions.col
   * executor-local blocks, no DFS write. Fast, and right for a single-JVM
   * run; but local checkpoint blocks die with their executor, and the
   * truncated lineage cannot recompute them, so a long production run on
-  * a real cluster should set '''`spark.graft.checkpointDir`''' (the
-  * original per-operator `spark.graft.cc.checkpointDir` is honored as a
-  * legacy alias) to a DFS path: every `graftCheckpoint` site then uses
-  * reliable `checkpoint()` into a fresh per-run subdirectory of that
-  * path, and an executor loss only recomputes from the checkpoint files.
+  * a real cluster should set '''`spark.graft.checkpointDir`''' to a DFS
+  * path: every `graftCheckpoint` site then uses reliable `checkpoint()`
+  * into a fresh per-run subdirectory of that path, and an executor loss
+  * only recomputes from the checkpoint files.
   * The trade is one distributed write per retained frame; retention is
   * bounded at every site (iteration state is ids/labels/vocab-sized,
   * never corpus-scale — each site's comment carries its bound). Spark
@@ -27,11 +26,9 @@ import org.apache.spark.sql.functions.col
   */
 object Checkpoints {
   private val Key = "spark.graft.checkpointDir"
-  private val LegacyKey = "spark.graft.cc.checkpointDir"
 
   private[graft] def configuredDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(Key).filter(_.nonEmpty)
-      .orElse(spark.conf.getOption(LegacyKey).filter(_.nonEmpty))
 
   /** One run subdirectory per configured base, cached for the JVM's
     * lifetime — so a session running many operators shares one run

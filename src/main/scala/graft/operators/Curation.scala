@@ -112,7 +112,7 @@ object Curation {
   // the pair delta, converging in O(log n) rounds on the DELTA's
   // cluster merges. State frames are localCheckpoint'd per advance so
   // lineage stays O(1) across batches; on a cluster point
-  // spark.graft.cc.checkpointDir at reliable storage and persist the
+  // spark.graft.checkpointDir at reliable storage and persist the
   // four frames as tables between runs.
   // -------------------------------------------------------------------
 

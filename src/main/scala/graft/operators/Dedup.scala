@@ -502,65 +502,121 @@ object Dedup {
   // d45: connected-component near-dup clusters. Pairwise candidate lists
   // under-specify dedup semantics: A~B, B~C is one cluster even when A and
   // C don't pair directly, and a keeper election must be CLUSTER-global
-  // (min id of the whole component) to be auditable. Components come from
-  // iterative min-label propagation over the (symmetric) pair list — no
-  // external graph library:
+  // (min id of the whole component) to be auditable. No external graph
+  // library; two paths, chosen by the MEASURED size of the pair list:
   //
-  //   each round:  label(v) ← min(label(v), min over neighbors' labels)
-  //                (edges contracted to the label graph each round)
-  //   then one pointer-jump: label(v) ← label(label(v))
+  //  - Local finish (the common case — near-dup pair lists are orders
+  //    smaller than the corpus). When the symmetric pair frame fits the
+  //    broadcast bound every node-sized frame the driver may hold already
+  //    obeys (`spark.graft.graph.broadcastLimit`, rows × fixed row
+  //    bytes, [[Graph.withinBroadcastLimit]]), it is collected once and
+  //    resolved by union-find over primitive arrays, the root of every
+  //    set being its minimum id. Two jobs after the pair checkpoint (a
+  //    count and a collect) instead of ~12 per contraction round; the
+  //    driver's working set (collected pairs, id and parent arrays, the
+  //    result rows) is a small constant multiple of that same bound, as
+  //    a broadcast's collect-and-build is.
+  //  - Distributed contraction, the only path for pair lists the driver
+  //    cannot hold — iterative min-label propagation on the contracted
+  //    label graph:
   //
-  // The contraction + pointer-jump pair converges in O(log n) rounds on
-  // the chain/clique mixes near-dup graphs produce (plain propagation
-  // alone is O(diameter)); each round is two shuffled joins + an
-  // aggregation on the CONTRACTED graph, which shrinks geometrically.
-  // localCheckpoint truncates the iterative lineage so plans stay flat.
-  // Checkpoint retention is bounded and small — unlike a corpus-wide
-  // cache, each retained round is O(pair-list) bytes (labels + contracted
-  // edges, ids only) and the round count is O(log n); the pair list is
-  // itself orders of magnitude smaller than the corpus (near-dups only),
-  // so the loop never pins corpus-scale data in executor memory.
+  //      each round:  label(v) ← min(label(v), min over neighbors' labels)
+  //                   then one pointer-jump: label(v) ← label(label(v))
+  //                   edges relabeled through each label GROUP's new label
+  //
+  //    It converges in O(log n) rounds on the chain/clique mixes near-dup
+  //    graphs produce (plain propagation alone is O(diameter)); each
+  //    round is a few shuffled joins + an aggregation on the CONTRACTED
+  //    graph, which shrinks geometrically. Every round is checkpointed
+  //    (ids only, O(pair-list) bytes, never corpus-scale), and the loop
+  //    raises past [[CcMaxRounds]] as its oracle twin [[CcSql]] does.
   // ---------------------------------------------------------------------
 
-  /** Materialize one frame of the iterative loop with truncated lineage —
-    * the [[Checkpoints]] switch (reliable `checkpoint()` when
-    * `spark.graft.checkpointDir` / the legacy `spark.graft.cc.checkpointDir`
-    * is set, `localCheckpoint` otherwise; see Checkpoints' doc for the
-    * retention/cleanup contract). A run retains O(pair-list · log n)
-    * bytes here — ids only, never corpus-scale. Both modes are exercised
-    * by DedupSimilaritySpec's "connectedComponents reliable-checkpoint
+  /** Materialize one frame with truncated lineage — the [[Checkpoints]]
+    * switch (reliable `checkpoint()` when `spark.graft.checkpointDir` is
+    * set, `localCheckpoint` otherwise; see Checkpoints' doc for the
+    * retention/cleanup contract). Both modes are exercised by
+    * DedupSimilaritySpec's "connectedComponents reliable-checkpoint
     * mode" test.
     */
   private def persistIter(df: DataFrame): DataFrame = df.graftCheckpoint(true)
+
+  /** Contraction-round cap of the distributed path. Every round merges
+    * at least the group holding each component's minimum label with a
+    * neighbor, and the contraction converges in O(log n) rounds on
+    * near-dup graphs; reaching the cap means the loop is not converging,
+    * which must fail loudly, not spin (CcPropertySpec pins the raise).
+    */
+  private val CcMaxRounds = 64
 
   /** (doc_id, cluster_id) for every node in `pairs`, cluster_id = min id
     * of the node's connected component.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // materialize the (possibly expensive) pair pipeline ONCE before
-    // deriving both loop frames from it — labels and edges each force an
-    // action, and without this checkpoint each would re-execute the full
-    // upstream candidate-generation pipeline
+    // sizing and resolving it — every later action would otherwise
+    // re-execute the full upstream candidate-generation pipeline
     val sym = persistIter(pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .union(pairs.select(col(bCol).as("a"), col(aCol).as("b"))))
+    val integralIds = sym.schema("a").dataType match {
+      case LongType | IntegerType => true
+      case _ => false
+    }
+    if (integralIds && Graph.withinBroadcastLimit(sym, sym.count())) localComponents(sym)
+    else distributedComponents(sym)
+  }
+
+  /** Union-find over the collected symmetric pair frame; the result is a
+    * local relation with the distributed path's schema.
+    */
+  private def localComponents(sym: DataFrame): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
+    val idType = sym.schema("a").dataType
+    // one direction of each symmetric pair carries every node
+    val half = sym.filter(col("a") <= col("b"))
+      .select(col("a").cast(LongType), col("b").cast(LongType)).as[(Long, Long)].collect()
+    val ids = new Array[Long](2 * half.length)
+    for (i <- half.indices) { ids(2 * i) = half(i)._1; ids(2 * i + 1) = half(i)._2 }
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    // node index = rank in id order, so the smaller index is the smaller
+    // id and linking every root under the smaller one leaves each set
+    // rooted at its minimum id
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for ((a, b) <- half) {
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (0 until n).map(i => (ids(i), ids(find(i)))).toDF("doc_id", "cluster_id")
+      .select(col("doc_id").cast(idType), col("cluster_id").cast(idType))
+  }
+
+  private[graft] def distributedComponents(sym: DataFrame,
+                                           maxRounds: Int = CcMaxRounds): DataFrame = {
     var labels = persistIter(sym.select(col("a").as("id")).distinct()
       .withColumn("label", col("id")))
     // label-graph edges; contracted (relabeled + dedup'd) every round
     var edges = persistIter(sym.distinct())
-    // Convergence check (r19): the contracted edge set is SYMMETRIC at
-    // every round (`sym` is, relabeling maps both directions, the a≠b
-    // filter and distinct preserve it), so "some node sees a smaller
-    // neighbor label" ⟺ "any contracted edge remains" — edges.isEmpty
-    // replaces the old per-round minN aggregate ACTION, which cost one
-    // full edge-scale aggregate job per round and made minN compute
-    // TWICE (once for the check, once inside the label update). The
-    // take(1) probe runs on the round's already-materialized checkpoint
-    // blocks; the loop runs the same number of rounds to the same fixed
-    // point (the converged labeling is round-schedule-invariant: label =
-    // min id of the component).
+    var rounds = 0
+    // the contracted edge set is SYMMETRIC at every round (`sym` is,
+    // relabeling maps both directions, the a≠b filter and distinct
+    // preserve it), so "some node sees a smaller neighbor label" ⟺ "any
+    // contracted edge remains"; the probe reads the round's checkpoint
     while (!edges.isEmpty) {
-      // min neighbor label per label-graph node — now evaluated once,
-      // inside the label-update checkpoint's job
+      rounds += 1
+      if (rounds > maxRounds)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds contraction rounds")
+      // min neighbor label per label-graph node
       val minN = edges.groupBy(col("a").as("label")).agg(min(col("b")).as("nl"))
         .filter(col("nl") < col("label"))
       // apply update, then pointer-jump: label(v) ← label(label(v)) —
@@ -574,14 +630,22 @@ object Dedup {
       val updated = labels.join(minN, Seq("label"), "left")
         .select(col("id"), least(col("label"), col("nl")).as("label"))
       val jump = updated.select(col("id").as("jid"), col("label").as("jl"))
-      labels = persistIter(updated.join(jump, col("label") === col("jid"), "left")
+      val next = persistIter(updated.join(jump, col("label") === col("jid"), "left")
         .select(col("id"), coalesce(col("jl"), col("label")).as("label")))
+      // every member of a group moves to the same new label, but node L
+      // itself need not belong to group L (it may have hooked elsewhere),
+      // so an endpoint L is relabeled through its group, never through
+      // node L's own label — that would strand the group's edges and
+      // split its component
+      val moved = labels.join(next.withColumnRenamed("label", "to"), "id")
+        .select(col("label").as("from"), col("to")).distinct()
       edges = persistIter(edges
-        .join(labels.withColumnRenamed("id", "a").withColumnRenamed("label", "la"), Seq("a"))
-        .join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "lb"), Seq("b"))
+        .join(moved.withColumnRenamed("from", "a").withColumnRenamed("to", "la"), Seq("a"))
+        .join(moved.withColumnRenamed("from", "b").withColumnRenamed("to", "lb"), Seq("b"))
         .select(col("la").as("a"), col("lb").as("b"))
         .filter(col("a") =!= col("b"))
         .distinct())
+      labels = next
     }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }

@@ -13,14 +13,16 @@ import graft.operators.Checkpoints.GraftCheckpointOps
   * no graph surface in the reference; this is part of the engine's
   * large-scale extension set).
   *
-  * Scale design: the projection (parts sharing an order) is built by one
-  * self-join on the order key — edge count grows LINEARLY with orders
-  * (per-order fan-out is bounded by order size, ~4 lineitems). Each
-  * PageRank iteration is one shuffle join (ranks to edge sources) + one
-  * hash aggregate (sum into destinations): the classic message-passing
-  * shape, O(|E|) per round, no driver-side iteration state. Five rounds
-  * are unrolled into one plan; Catalyst's ReuseExchange dedups the
-  * edge-side shuffles.
+  * Scale design: the projection (parts sharing an order) is built from
+  * one per-order part-set aggregate — edge count grows LINEARLY with
+  * orders (per-order fan-out is bounded by order size, ~4 lineitems).
+  * Each PageRank round is ONE shuffle: the frozen, checkpointed edges
+  * join the node-sized outflow (a size-conditional broadcast, see
+  * [[nodeBroadcast]]), the node state's own rows ride the same union,
+  * and one hash aggregate by node yields the next (node, rank, degree)
+  * state, which is checkpointed — so a round is a broadcast job, a map
+  * stage and a result stage, and its plan never grows with the round
+  * number. O(|E|) per round, no driver-side iteration state.
   *
   * Determinism: ranks live on an integer 1e12 grid; every division is a
   * floor over positive BIGINTs (`div` in Spark ≡ `//` in DuckDB), so the
@@ -58,12 +60,23 @@ object Graph {
     */
   private val BroadcastLimitKey = "spark.graft.graph.broadcastLimit"
 
-  private[operators] def nodeBroadcast(df: DataFrame, nodeRows: Long): DataFrame = {
+  private[operators] def nodeBroadcast(df: DataFrame, nodeRows: Long): DataFrame =
+    if (withinBroadcastLimit(df, nodeRows)) broadcast(df) else df
+
+  /** Whether `rows` rows of `df`'s fixed-width schema fit under
+    * `spark.graft.graph.broadcastLimit` — the one bound on node-sized
+    * frames the driver may hold, shared by [[nodeBroadcast]] and the
+    * driver-side finish of [[Dedup.connectedComponents]].
+    */
+  private[operators] def withinBroadcastLimit(df: DataFrame, rows: Long): Boolean = {
     // fixed-width schemas only at these sites; +24 B/row for the hash
     // relation's entry overhead
     val rowBytes = df.schema.map(_.dataType.defaultSize.toLong).sum + 24L
-    sizedBroadcast(df, nodeRows * rowBytes)
+    rows <= broadcastLimit(df.sparkSession) / rowBytes
   }
+
+  private def broadcastLimit(spark: SparkSession): Long =
+    spark.conf.getOption(BroadcastLimitKey).map(_.toLong).getOrElse(256L << 20)
 
   /** The same size-conditional broadcast for frames whose byte size the
     * caller must estimate itself (variable-width rows — e.g. the q66/q82
@@ -73,80 +86,67 @@ object Graph {
     * hints with a "drop the hints manually on a big graph" comment, the
     * hazard class VERDICT r17 item 4 flagged).
     */
-  private[operators] def sizedBroadcast(df: DataFrame, estBytes: Long): DataFrame = {
-    val limit = df.sparkSession.conf.getOption(BroadcastLimitKey)
-      .map(_.toLong).getOrElse(256L << 20)
-    if (estBytes <= limit) broadcast(df) else df
-  }
+  private[operators] def sizedBroadcast(df: DataFrame, estBytes: Long): DataFrame =
+    if (estBytes <= broadcastLimit(df.sparkSession)) broadcast(df) else df
 
-  /** (src, dst) co-purchase edges + per-source out-degrees + node list —
-    * each `localCheckpoint`ed (the d45 idiom): the edge set is invariant
-    * across the five rank iterations, and checkpointing materializes it
-    * ONCE instead of replaying the order self-join per round (measured
-    * 9.0 s → ~2 s on the sf0.1 suite run). On a cluster with a
-    * checkpoint dir, `checkpoint` swaps in for executor-loss tolerance,
-    * same as connectedComponents' `spark.graft.cc.checkpointDir` switch.
+  /** (src, dst) co-purchase edges and the (node, d) node list with
+    * per-source out-degrees — each `graftCheckpoint`ed: the edge set is
+    * invariant across the rank iterations, and checkpointing
+    * materializes it ONCE instead of replaying the projection per round.
     */
-  private def projection(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    // r18: build the per-order part set with ONE hash aggregate
-    // (map-side-combined collect_set) and fan out the ordered pairs from
-    // the sorted array, instead of lineitem-distinct + self-join — one
-    // shuffle replaces two plus a join, and the per-order fan-out work is
-    // identical (order size is bounded, ~4 lineitems). Pair VALUES are
-    // unchanged: sort_array makes the per-order set canonical, the
-    // explode emits every ordered pair (a ≠ b), and the same pair from
-    // two orders still collapses downstream exactly as the join form did
-    // (e deliberately keeps per-order multiplicity — deg counts it).
+  private def projection(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    // the per-order part set, ONE hash aggregate (map-side-combined
+    // collect_set); sort_array makes it canonical. The edges fan out
+    // every ordered pair (a ≠ b) of each set with two codegen'd explodes
+    // and deliberately keep per-order multiplicity (the same pair from
+    // two orders is two edges — the oracle's join form does the same).
     val sets = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
     val e = sets
-      .select(explode(flatten(transform(col("ps"), a =>
-        filter(transform(col("ps"), b => struct(a.as("src"), b.as("dst"))),
-          p => p.getField("src") =!= p.getField("dst"))))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
+      .select(explode(col("ps")).as("src"), col("ps"))
+      .select(col("src"), explode(col("ps")).as("dst"))
+      .filter(col("src") =!= col("dst"))
       .graftCheckpoint(true)
-    val nodes = Tables.lineitem(spark, dir).select(col("l_partkey").as("node"))
-      .distinct().graftCheckpoint(true)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+    // every part appears in some order's set, and each order holding it
+    // gives it |ps| − 1 out-edges: nodes and out-degrees are one
+    // aggregate over the sets, no second edge-scale pass
+    val nodes = sets
+      .select(explode(col("ps")).as("node"), (size(col("ps")) - 1).as("k"))
+      .groupBy(col("node")).agg(sum(col("k")).as("d"))
       .graftCheckpoint(true)
-    (e, deg, nodes)
+    (e, nodes)
   }
 
   def q63PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val (e, deg, nodes) = projection(spark, dir)
+    val (e, nodes) = projection(spark, dir)
     // one cheap job over the checkpointed node frame: the measured node
-    // count that sizes every per-round broadcast decision
+    // count is the rank normalizer (a plan literal) and sizes every
+    // per-round broadcast decision
     val nNodes = nodes.count()
-    val nAgg = nodes.agg(count(lit(1)).as("cnt"))
-    var r = nodes.crossJoin(nAgg)
-      .select(col("node"), expr(s"${PrScale}L div cnt").as("r"))
+    // an empty graph has no rows to divide; max(·, 1) keeps the literals
+    // defined without a branch
+    val n = math.max(nNodes, 1L)
+    val base = (PrScale * 15) / (100 * n)
+    var st = nodes.select(col("node"), lit(PrScale / n).as("r"), col("d"))
     for (_ <- 1 to PrIters) {
-      // per-source outflow first: rank ⋈ degree is node-sized (the part
-      // dimension), so it broadcasts — size-conditionally, see
-      // nodeBroadcast — and the EDGES NEVER SHUFFLE: each round is a
-      // broadcast hash join + partial-aggregated sum into destinations.
-      // At billions of nodes the rank state outgrows the limit and the
-      // same plan degrades gracefully to a shuffle join on src — the
-      // edge set still moves only once per round.
-      val outflow = r.join(deg.withColumnRenamed("d", "dd"), "node")
-        .select(col("node").as("src_n"), expr("(r * 85) div (100 * dd)").as("c"))
-      val contrib = e
-        .join(nodeBroadcast(outflow, nNodes), col("src") === col("src_n"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      // node-sized rank state, checkpointed per round (the q151/q115
-      // idiom, r18): composed bare the 5-round unroll accumulated a
-      // 149-operator / 68-Exchange plan whose earlier rounds re-plan per
-      // reference — checkpointed, each round is one broadcast join +
-      // one hash aggregate over the frozen edge blocks
-      r = nodes.crossJoin(nAgg)
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (expr(s"(${PrScale}L * 15) div (100 * cnt)") + coalesce(col("inflow"), lit(0L)))
-            .as("r"))
+      // per-source outflow from the node-sized state: it broadcasts —
+      // size-conditionally, see nodeBroadcast — and the EDGES NEVER
+      // SHUFFLE. At billions of nodes the state outgrows the limit and
+      // the same plan degrades to a shuffle join on src.
+      val outflow = st.filter(col("d") > 0)
+        .select(col("node").as("src_n"), expr("(r * 85) div (100 * d)").as("c"))
+      val inflow = e.join(nodeBroadcast(outflow, nNodes), col("src") === col("src_n"))
+        .select(col("dst").as("node"), col("c"), lit(0L).as("d"))
+      // the state's own zero-inflow rows keep every node (and its degree)
+      // in the one aggregate: rank = teleport share + Σ inflow, exactly
+      // the oracle's COALESCE(SUM(...), 0) over the node LEFT JOIN
+      st = inflow.unionByName(st.select(col("node"), lit(0L).as("c"), col("d")))
+        .groupBy(col("node"))
+        .agg((sum(col("c")) + base).as("r"), max(col("d")).as("d"))
         .graftCheckpoint(true)
     }
-    r.orderBy(col("r").desc, col("node"))
+    st.select(col("node"), col("r")).orderBy(col("r").desc, col("node"))
   }
 
   val q63PageRankSql: String = {
@@ -414,12 +414,13 @@ object Graph {
   private val KhopRounds = 3
 
   def q67KHopReach(spark: SparkSession, dir: String): DataFrame = {
-    val (e, _, nodes) = projection(spark, dir)
+    val (e, nodes) = projection(spark, dir)
     // one cheap job off the checkpointed node frame sizes the per-round
     // broadcast decisions (frontier/visited are ≤ node-sized) — r19,
     // these joins were unhinted and relied on sub-10 MB auto-broadcast
     val nNodes = nodes.count()
-    val seeds = nodes.where(col("node") % 500 === 0).graftCheckpoint(true)
+    val seeds = nodes.where(col("node") % 500 === 0).select(col("node"))
+      .graftCheckpoint(true)
     var visited = seeds
     var frontier = seeds
     // Collect each round's frontier as a FRAME (not a driver count): the
@@ -482,7 +483,7 @@ object Graph {
   private val SsspRounds = 3
 
   def q87WeightedPath(spark: SparkSession, dir: String): DataFrame = {
-    val (e, _, nodes) = projection(spark, dir)
+    val (e, nodes) = projection(spark, dir)
     // node count for the per-round broadcast decisions (dist is
     // node-sized) — r19, same rationale as q67/q63
     val nNodes = nodes.count()

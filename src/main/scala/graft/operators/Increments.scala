@@ -34,12 +34,17 @@ object Increments {
     */
   private[graft] def monotoneHalves(df: DataFrame, idCol: String): Seq[DataFrame] = {
     val mx = df.agg(max(col(idCol))).head()
-    if (mx.isNullAt(0)) Seq(df)
-    else {
-      val cut = mx.getLong(0) / 2
-      Seq(df.filter(col(idCol) <= cut), df.filter(col(idCol) > cut))
-    }
+    halvesAt(df, idCol, if (mx.isNullAt(0)) None else Some(mx.getLong(0)))
   }
+
+  /** [[monotoneHalves]] from an already-measured max(id) (None: empty). */
+  private[graft] def halvesAt(df: DataFrame, idCol: String, maxId: Option[Long]): Seq[DataFrame] =
+    maxId match {
+      case None => Seq(df)
+      case Some(mx) =>
+        val cut = mx / 2
+        Seq(df.filter(col(idCol) <= cut), df.filter(col(idCol) > cut))
+    }
 
   /** Persist named state frames, one parquet dir per name. */
   private[graft] def saveState(path: String, frames: (String, DataFrame)*): Unit =

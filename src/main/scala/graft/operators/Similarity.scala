@@ -306,8 +306,11 @@ object Similarity {
     * the plan, keeping the filter codegen'd. The centroid spec pins
     * nlist ≈ sqrt(n) at two corpus sizes.
     */
-  private[graft] def sampleCentroids(e: DataFrame): DataFrame =
-    e.filter(PortableHash.h60(col("vec_id")) < centroidThreshold(e.count()))
+  private[graft] def sampleCentroids(e: DataFrame): DataFrame = sampleCentroids(e, e.count())
+
+  /** [[sampleCentroids]] for a caller that already measured n = |e|. */
+  private[graft] def sampleCentroids(e: DataFrame, n: Long): DataFrame =
+    e.filter(PortableHash.h60(col("vec_id")) < centroidThreshold(n))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
 
   /** SQL mirror of [[sampleCentroids]] (no leading WITH): DuckDB computes
@@ -1392,13 +1395,14 @@ object Similarity {
       nearest(b.select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", state.cents, TopicProbe),
       "vec_id", "embedding", "cid")
-    val all = if (state.index == null) newAssigned
-      else state.index.unionByName(newAssigned)
+    // the first batch's index IS its (already checkpointed) assignment
+    val index = if (state.index == null) newAssigned
+      else state.index.unionByName(newAssigned).graftCheckpoint(true)
     // scored delta = every pair whose LATER member is in this batch
-    val delta = scoredCellPairs(all, newAssigned)
+    val delta = scoredCellPairs(index, newAssigned)
     val cand = if (state.cand == null) Checkpoints.fresh(delta, "va", "vb", "sim")
       else Checkpoints.fresh(state.cand.unionByName(delta), "va", "vb", "sim")
-    TopicState(state.cents, all.graftCheckpoint(true), cand)
+    TopicState(state.cents, index, cand)
   }
 
   /** d65's cluster labeling for everything folded so far. */
@@ -1409,11 +1413,15 @@ object Similarity {
   def d68IncrementalTopics(spark: SparkSession, dir: String): DataFrame = {
     Vectors.register(spark)
     val raw = Tables.embeddings(spark, dir)
-    if (raw.isEmpty) // no corpus → no quantizer to fit (d64's guard)
+    // one scan sizes the whole fold: n fits the quantizer, max(id) splits
+    // the batches
+    val size = raw.agg(count(lit(1)), max(col("vec_id"))).head()
+    if (size.getLong(0) == 0) // no corpus → no quantizer to fit (d64's guard)
       return raw.select(col("vec_id"), col("vec_id").as("cluster_id"),
         lit(1L).as("n_members"))
-    val cents = sampleCentroids(raw)
-    topicClustersOf(Increments.monotoneHalves(raw, "vec_id")
+    val cents = sampleCentroids(raw, size.getLong(0))
+    val maxId = if (size.isNullAt(1)) None else Some(size.getLong(1))
+    topicClustersOf(Increments.halvesAt(raw, "vec_id", maxId)
       .foldLeft(TopicState(cents, null, null))(advanceTopics))
   }
 

@@ -53,12 +53,14 @@ object Sources {
 
   /** P1 (`AVG:80-81`): Kafka value bytes → (readTag_id, value: double).
     * Malformed records produce nulls instead of the reference's
-    * task-killing JSONException — filtered, not fatal.
+    * task-killing JSONException — filtered, not fatal. That includes a
+    * non-numeric `readValue`: `try_cast` yields null where an ANSI cast
+    * would raise `CAST_INVALID_INPUT` and stop the stream.
     */
   def parseReadings(raw: DataFrame): DataFrame =
     raw.select(from_json(col("value").cast(StringType), readingSchema).as("j"))
       .select(col("j.readTag_id").as("readTag_id"),
-        col("j.readValue").cast(DoubleType).as("value"))
+        col("j.readValue").try_cast(DoubleType).as("value"))
       .filter(col("readTag_id").isNotNull && col("value").isNotNull)
 
   /** P2 (`AGG:64-72`): extract just the tag id for the wordcount job. */

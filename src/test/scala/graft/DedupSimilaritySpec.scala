@@ -244,14 +244,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    spark.conf.set("spark.graft.cc.checkpointDir", dir)
+    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       assert(run() == local, "reliable mode must produce identical clusters")
       def files(p: java.io.File): Int =
         if (p.isFile) 1 else Option(p.listFiles).map(_.map(files).sum).getOrElse(0)
       assert(files(new java.io.File(dir)) > 0,
         "reliable mode must write checkpoint files into the configured dir")
-    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("c70 cluster-global keeper: only cluster minima survive near-dup removal") {

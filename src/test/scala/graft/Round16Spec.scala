@@ -8,8 +8,7 @@ import graft.operators.{Checkpoints, TextOps}
 /** Round-16 contracts (VERDICT r15 items 3 and ADVICE r15).
   *
   *  - '''One reliable-checkpoint switch for every iterative loop.'''
-  *    `spark.graft.checkpointDir` (legacy alias
-  *    `spark.graft.cc.checkpointDir`) flips EVERY `graftCheckpoint`
+  *    `spark.graft.checkpointDir` flips EVERY `graftCheckpoint`
   *    site — Louvain/LPA sweeps, the BPE budget fold, the incremental
   *    dedup/SemDeDup folds — from executor-local blocks to reliable
   *    `checkpoint()` files. The pin runs representative loops from each
@@ -70,15 +69,15 @@ class Round16Spec extends AnyFunSuite {
     checkReliable("d63_incremental_neardup", "d64_incremental_semdedup")
   }
 
-  test("reliable-checkpoint switch: legacy cc key still flips every loop") {
+  test("reliable-checkpoint switch: the one key flips the label-propagation loop") {
     val localRows = rows(SparkEntry.queries("q152_label_propagation")(spark, dir))
-    val base = java.nio.file.Files.createTempDirectory("graft_r16_legacy").toString
-    spark.conf.set("spark.graft.cc.checkpointDir", base)
+    val base = java.nio.file.Files.createTempDirectory("graft_r16_key").toString
+    spark.conf.set("spark.graft.checkpointDir", base)
     try {
       assert(rows(SparkEntry.queries("q152_label_propagation")(spark, dir)) == localRows)
       assert(fileCount(new java.io.File(base)) > 0,
-        "legacy key must route loops to reliable checkpoints too")
-    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
+        "the key must route loops to reliable checkpoints")
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("JobConfig multi-topic + minPartitions parity (AVG:41-45 topicMap)") {

@@ -296,6 +296,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(reference.get("kafka.enable.idempotence").contains("false"))
   }
 
+  test("parseReadings drops a non-numeric readValue and the stream keeps running") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[String]
+    val q = Sources.parseReadings(input.toDF()).writeStream.format("memory")
+      .queryName("parsed_readings").outputMode("append").start()
+    try {
+      input.addData("""{"readTag_id":"b1 t1","readValue":"2.5"}""",
+        """{"readTag_id":"b1 t2","readValue":"n/a"}""")
+      q.processAllAvailable()
+      input.addData("""{"readTag_id":"b1 t3","readValue":"4"}""")
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty)
+      val got = spark.table("parsed_readings").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(got == Map("b1 t1" -> 2.5, "b1 t3" -> 4.0))
+    } finally q.stop()
+  }
+
   test("per-batch wordcount resets between micro-batches (A1 semantics)") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
