@@ -38,43 +38,18 @@ object StreamBench {
   private final class Totals extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     var rows = 0L
-    // last state-operator snapshot (rows held, bytes used) — the
-    // state-TTL sizing probe reads these after the replay drains
-    var stateRows = 0L
-    var stateBytes = 0L
     val epochMs = ArrayBuffer[Double]()
-    // per-stage duration samples (addBatch, getBatch, latestOffset,
-    // queryPlanning, walCommit, commitOffsets, ...) for the envelope
-    // attribution protocol (GRAFT_STREAM_PROFILE)
-    val stageMs = scala.collection.mutable.Map[String, ArrayBuffer[Double]]()
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit =
       if (e.progress.numInputRows > 0) synchronized {
         rows += e.progress.numInputRows
         epochMs += e.progress.durationMs.getOrDefault("triggerExecution", 0L).toDouble
-        e.progress.durationMs.forEach((k, v) =>
-          stageMs.getOrElseUpdate(k, ArrayBuffer[Double]()) += v.toDouble)
-        val so = e.progress.stateOperators
-        if (so.nonEmpty) {
-          stateRows = so.map(_.numRowsTotal).sum
-          stateBytes = so.map(_.memoryUsedBytes).sum
-        }
       }
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
   }
 
   private case class RunStats(rows: Long, epochMs: Seq[Double],
-                              wallSec: Double,
-                              stageMs: Map[String, Seq[Double]] = Map.empty,
-                              stateRows: Long = 0L, stateBytes: Long = 0L) {
-    /** p50 per stage, sorted by descending cost — the attribution line. */
-    def stageP50Json: String = stageMs.toSeq
-      .map { case (k, vs) =>
-        val s = vs.sorted
-        k -> s(math.min(s.size - 1, math.max(0, math.ceil(0.5 * s.size).toInt - 1)))
-      }
-      .sortBy(-_._2)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+                              wallSec: Double) {
     def epochs: Int = epochMs.size
     // nearest-rank percentile: index = ceil(p·n) − 1 (so p50 of 8 values
     // is the 4th, not the 5th)
@@ -111,12 +86,9 @@ object StreamBench {
       Thread.sleep(100); prev = cur; cur = totals.synchronized(totals.rows); spins += 1
     }
     spark.streams.removeListener(totals)
-    val (rows, ms, st, sr, sb) = totals.synchronized(
-      (totals.rows, totals.epochMs.toSeq,
-        totals.stageMs.view.mapValues(_.toSeq).toMap,
-        totals.stateRows, totals.stateBytes))
+    val (rows, ms) = totals.synchronized((totals.rows, totals.epochMs.toSeq))
     q.stop()
-    RunStats(rows, ms, elapsed, st, sr, sb)
+    RunStats(rows, ms, elapsed)
   }
 
   /** Warm-up replay (discarded) then the measured one. */
@@ -177,32 +149,6 @@ object StreamBench {
       s""""join_rows_per_sec":${join.rowsPerSec},""" +
       s""""join_p50_epoch_ms":${join.p50},"join_p95_epoch_ms":${join.p95},""" +
       s""""sf":"$sfDir"}""")
-    // opt-in per-stage p50 breakdown (BASELINE envelope attribution) on a
-    // separate metric line so the driver's primary-line parse is untouched
-    if (sys.env.contains("GRAFT_STREAM_PROFILE"))
-      println(s"""{"metric":"stream_stage_p50_ms",""" +
-        s""""decl":${decl.stageP50Json},"fidelity":${fid.stageP50Json},""" +
-        s""""join":${join.stageP50Json}}""")
-    // opt-in state-TTL sizing probe (VERDICT r16 item 7): the same
-    // transformWithState pipeline at two key cardinalities, reporting
-    // the RocksDB state rows/bytes the listener observed at drain —
-    // the measured basis for BASELINE.md's state-sizing guidance on
-    // the unbounded-key running-stats shape (AVG:97-99).
-    if (sys.env.contains("GRAFT_STREAM_STATE_PROBE")) {
-      def probe(keyCol: String, name: String): RunStats =
-        runOnce(spark, StatefulStats(Sources.eventsStreamFrom(spark, glob),
-          col(keyCol), col("value")).toDF(), name)
-      def card(c: String): Long =
-        Tables.events(spark, sfDir).select(c).distinct().count()
-      val low = probe("event_type", "state_probe_type")
-      val high = probe("user_id", "state_probe_user")
-      def j(tag: String, keys: Long, r: RunStats): String =
-        s""""$tag":{"keys":$keys,"state_rows":${r.stateRows},""" +
-        s""""state_bytes":${r.stateBytes},"rows_per_sec":${r.rowsPerSec}}"""
-      println(s"""{"metric":"stream_state_probe",""" +
-        s"""${j("event_type", card("event_type"), low)},""" +
-        s"""${j("user_id", card("user_id"), high)},"sf":"$sfDir"}""")
-    }
     spark.stop()
   }
 }

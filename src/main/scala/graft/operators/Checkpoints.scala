@@ -65,20 +65,15 @@ object Checkpoints {
   /** Chain-position drop-in for `localCheckpoint(eager)`: reliable
     * `checkpoint(eager)` when the switch is set, `localCheckpoint`
     * otherwise. Type-preserving so typed Dataset pipelines keep their
-    * encoders.
+    * encoders. An eager checkpoint runs its frame's plan as a SQL
+    * execution of its own, so the per-round plans of iterative operators
+    * never appear in the final frame's explain; Spark's event log
+    * (`spark.eventLog.enabled`) records each one.
     */
   implicit final class GraftCheckpointOps[T](private val ds: Dataset[T])
       extends AnyVal {
     def graftCheckpoint(eager: Boolean = true): Dataset[T] = {
       val spark = ds.sparkSession
-      // debug-only plan visibility: the per-round plans of iterative
-      // operators execute INSIDE checkpoint materialization and never
-      // appear in the final frame's explain — this prints each
-      // checkpointed frame's physical plan when the switch is set
-      // (profiling evidence only; off on every query/bench path)
-      if (spark.conf.getOption("spark.graft.explainCheckpoints").contains("true"))
-        println("GRAFT_CKPT_PLAN\n" + ds.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
       configuredDir(spark) match {
         case Some(base) => ensureDir(spark, base); ds.checkpoint(eager)
         case None => ds.localCheckpoint(eager)

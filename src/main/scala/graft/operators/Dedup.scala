@@ -128,16 +128,16 @@ object Dedup {
     // the shingle pipeline runs once (AQE exchange reuse, verified in the
     // plan) — and at 100 TB pinning a corpus-wide shingle table in
     // executor memory would be a hazard, not a win.
-    // Per-site default shuffle_hash (round-18 sweep, [[CandidateJoin]]):
-    // the ONE site where the frozen hint beat AQE in every cell of the
-    // idle/IO-contended profile — the build side is the ~260k-row
-    // highly-duplicated shingle table and the hinted hash join skips the
-    // dual sort sort-merge pays. spark.graft.candidateJoinHint=none
-    // forces AQE here too.
+    // shuffle_hash is this site's measured choice: the build side is a
+    // ~260k-row highly-duplicated shingle table, where the hash join
+    // skips the sort that sort-merge pays on both duplicated sides. In
+    // the round-18 sweep (idle / IO-contended, BASELINE.md) the hint won
+    // every paired cell, by about 15-25%; every other candidate join in
+    // Dedup/Similarity is left to AQE.
     val sh = shingledCounted(spark, dir)
       .select(col("doc_id"), col("n_shingles"),
         PortableHash.h60(col("shingle")).as("k"))
-    sh.as("a").join(CandidateJoin.hinted(sh.as("b"), default = "shuffle_hash"),
+    sh.as("a").join(sh.as("b").hint("shuffle_hash"),
         col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.n_shingles").as("na"), col("b.n_shingles").as("nb"))
@@ -205,9 +205,6 @@ object Dedup {
       .select(col("doc_id"),
         array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
-
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFrom(Tables.documents(spark, dir))
 
   /** Default band-bucket membership cap for the document LSH joins: doc
     * buckets collide only through genuine shingle similarity (md5 keys are
@@ -279,7 +276,7 @@ object Dedup {
     */
   private[operators] def pairsFromBandJoin(x: DataFrame, y: DataFrame,
                                            threshold: Double): DataFrame =
-    x.as("x").join(CandidateJoin.hinted(y.as("y")),
+    x.as("x").join(y.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
@@ -403,23 +400,14 @@ object Dedup {
           .bitwiseAND(lit(mask)))))
       .select(col("doc_id"), col("simhash"), col("pos").as("band"), col("col").as("bval"))
     val bands = BucketGuard.capHotBuckets(rawBands, Seq("band", "bval"), DocBucketCap)
-    // join strategy is conf-switchable so the shuffle-hash-vs-AQE
-    // question stays measurable (VERDICT r16 scale-killer watch: d43's
-    // contended-battery readings were the subset's worst outlier two
-    // driver rounds running). Default lets AQE pick: the r17 4-cell
-    // profile (idle / 16-spinner / 32-spinner × hint / none,
-    // BASELINE.md round-17 table) read AQE ~10% faster in EVERY cell
-    // and no worse under contention — and at cluster scale AQE's
-    // runtime choice (broadcast when a capped band side is small,
-    // sort-merge when the hash side would spill, skew-split when a
-    // bucket runs hot) beats a frozen hint. Set
-    // spark.graft.simhash.joinHint=shuffle_hash to pin the old plan.
-    val hinted = spark.conf.getOption("spark.graft.simhash.joinHint")
-      .getOrElse("none") match {
-      case "none" => bands.as("y")
-      case h => bands.as("y").hint(h)
-    }
-    bands.as("x").join(hinted,
+    // no strategy hint: AQE picks. The r17 4-cell profile (idle /
+    // 16-spinner / 32-spinner × shuffle_hash / none, BASELINE.md
+    // round-17 table) read AQE ~10% faster in EVERY cell and no worse
+    // under contention — and at cluster scale AQE's runtime choice
+    // (broadcast when a capped band side is small, sort-merge when the
+    // hash side would spill, skew-split when a bucket runs hot) beats a
+    // frozen hint.
+    bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bval") === col("y.bval") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
@@ -1264,7 +1252,7 @@ object Dedup {
       // prefix length for Jaccard θ=0.5: n − ⌈n/2⌉ + 1 (integer div)
       .where(col("rn") <= expr("n_shingles - ((n_shingles + 1) div 2) + 1"))
       .select(col("doc_id"), col("k"))
-    val cand = prefix.as("a").join(CandidateJoin.hinted(prefix.as("b")),
+    val cand = prefix.as("a").join(prefix.as("b"),
         col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
@@ -1338,7 +1326,7 @@ object Dedup {
       .where(col("rn") <= expr("n_shingles - ((8 * n_shingles + 9) div 10) + 1"))
       .select(col("doc_id"), col("k"))
     val cand = prefix.as("a")
-      .join(CandidateJoin.hinted(sh.select(col("doc_id"), col("k")).as("b")),
+      .join(sh.select(col("doc_id"), col("k")).as("b"),
         col("a.k") === col("b.k") && col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("src_id"), col("b.doc_id").as("dst_id"))
       .distinct()

@@ -89,6 +89,27 @@ object Graph {
   private[operators] def sizedBroadcast(df: DataFrame, estBytes: Long): DataFrame =
     if (estBytes <= broadcastLimit(df.sparkSession)) broadcast(df) else df
 
+  /** Undirected degree of a (src, dst) edge frame: (node, d), each
+    * endpoint counting the edge once.
+    */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("src").as("node"))
+      .union(und.select(col("dst").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+
+  /** `und` with column `attr` of the node-keyed frame `nodes` attached at
+    * both endpoints, as `srcAs` and `dstAs` — two size-conditional
+    * broadcast joins (`nodeRows` bounds the node count), so the edge set
+    * is not shuffled to learn its endpoints' attributes.
+    */
+  private def withEndpoints(und: DataFrame, nodes: DataFrame, attr: String,
+      srcAs: String, dstAs: String, nodeRows: Long): DataFrame =
+    und
+      .join(nodeBroadcast(
+        nodes.select(col("node").as("src"), col(attr).as(srcAs)), nodeRows), "src")
+      .join(nodeBroadcast(
+        nodes.select(col("node").as("dst"), col(attr).as(dstAs)), nodeRows), "dst")
+
   /** (src, dst) co-purchase edges and the (node, d) node list with
     * per-source out-degrees — each `graftCheckpoint`ed: the edge set is
     * invariant across the rank iterations, and checkpointing
@@ -231,20 +252,11 @@ object Graph {
     // one cheap job over the checkpointed edge frame: bounds every
     // broadcast decision below (nodes with degree ≥ 1 number ≤ 2m)
     val m = und.count()
-    // undirected degree (each endpoint sees the edge once) — node-sized,
-    // so both orientation lookups are BROADCAST joins (size-conditional,
-    // r19): the edge set is never shuffled to learn its endpoint degrees
-    // while the degree frame fits, and degrades to a shuffle join above
-    // the limit instead of OOMing on a forced hint
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    // the degree frame is node-sized, so both orientation lookups are
+    // size-conditional broadcast joins (r19)
+    val deg = degrees(und)
     // orient small-(deg, id) endpoint → large
-    val or = und
-      .join(nodeBroadcast(
-        deg.select(col("node").as("src"), col("d").as("ds")), 2 * m), "src")
-      .join(nodeBroadcast(
-        deg.select(col("node").as("dst"), col("d").as("dd")), 2 * m), "dst")
+    val or = withEndpoints(und, deg, "d", "ds", "dd", 2 * m)
       .select(
         when(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")),
           col("src")).otherwise(col("dst")).as("u"),
@@ -364,9 +376,7 @@ object Graph {
       .select(col("u"), col("v"), explode(array_intersect(col("nu"), col("nv"))).as("w"))
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
     val tri = corners.groupBy(col("node")).agg(count(lit(1)).as("tri"))
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
+    val deg = degrees(und)
     val dd = col("d").cast(DoubleType)
     deg.filter(col("d") >= 2)
       .join(tri, Seq("node"), "left")
@@ -561,15 +571,9 @@ object Graph {
     // nodes with degree ≥ 1 number ≤ 2m — one cheap count bounds the
     // degree-frame broadcast (r19, was a forced hint)
     val mEdges = und.count()
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(und)
     val dec = DecimalType(38, 0)
-    val m = und
-      .join(nodeBroadcast(
-        deg.select(col("node").as("src"), col("d").as("ds")), 2 * mEdges), "src")
-      .join(nodeBroadcast(
-        deg.select(col("node").as("dst"), col("d").as("dd")), 2 * mEdges), "dst")
+    val m = withEndpoints(und, deg, "d", "ds", "dd", 2 * mEdges)
       .agg(count(lit(1)).as("n_edges"),
         sum((col("ds") + col("dd")).cast(dec)).as("sx"),
         sum(col("ds").cast(dec) * col("ds") + col("dd").cast(dec) * col("dd")).as("sxx"),
@@ -876,17 +880,11 @@ object Graph {
   private[graft] def richClubFrom(spark: SparkSession, und: DataFrame): DataFrame = {
     // same ≤ 2m node bound for the degree-frame broadcasts (r19)
     val mEdges = und.count()
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(und)
     // two consumers (threshold scan + club counts) of a degree-bounded frame
     val degHist = deg.groupBy(col("d")).agg(count(lit(1)).as("nd"))
       .graftCheckpoint(false)
-    val edgeHist = und
-      .join(nodeBroadcast(
-        deg.select(col("node").as("src"), col("d").as("ds")), 2 * mEdges), "src")
-      .join(nodeBroadcast(
-        deg.select(col("node").as("dst"), col("d").as("dd")), 2 * mEdges), "dst")
+    val edgeHist = withEndpoints(und, deg, "d", "ds", "dd", 2 * mEdges)
       .select(least(col("ds"), col("dd")).as("md"))
       .groupBy(col("md")).agg(count(lit(1)).as("ne"))
     // exact decile thresholds from the cumulative degree histogram; the
@@ -996,17 +994,11 @@ object Graph {
     // checkpointed LPA labeling, q135 a part-table projection) sizes the
     // three broadcasts — r19, were forced hints
     val nNodes = comm.count()
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(und)
     val dc = deg.join(nodeBroadcast(comm, nNodes), "node")
       .groupBy(col("comm"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("d_c"))
-    val ec = und
-      .join(nodeBroadcast(
-        comm.select(col("node").as("src"), col("comm").as("cs")), nNodes), "src")
-      .join(nodeBroadcast(
-        comm.select(col("node").as("dst"), col("comm").as("cd")), nNodes), "dst")
+    val ec = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
       .filter(col("cs") === col("cd"))
       .groupBy(col("cs").as("comm")).agg(count(lit(1)).as("e_c"))
     val m = und.agg(count(lit(1)).as("m"))
@@ -1135,11 +1127,7 @@ object Graph {
     // node-sized partition broadcasts size-conditionally (r19 — these
     // were forced broadcast() hints, the exact 100×-scale OOM hazard
     // nodeBroadcast exists for; below the limit the plan is unchanged)
-    val ec2 = und
-      .join(nodeBroadcast(
-        comm.select(col("node").as("src"), col("comm").as("cs")), nNodes), "src")
-      .join(nodeBroadcast(
-        comm.select(col("node").as("dst"), col("comm").as("cd")), nNodes), "dst")
+    val ec2 = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
     val kic = ec2.select(col("src").as("node"), col("cd").as("c"))
       .union(ec2.select(col("dst").as("node"), col("cs").as("c")))
       .groupBy(col("node"), col("c")).agg(count(lit(1)).as("k_ic"))
@@ -1199,9 +1187,7 @@ object Graph {
     // [[modularityFrom]]'s q column — oracle hash-checks it), instead of
     // two full per-community modularityFrom reports max-folded to the
     // same scalar.
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d")).graftCheckpoint(true)
+    val deg = degrees(und).graftCheckpoint(true)
     val m = und.agg(count(lit(1)).as("m")).graftCheckpoint(true)
     // one cheap job over the checkpointed degree frame: the measured
     // node count that sizes every broadcast decision in the sweep
@@ -1350,11 +1336,7 @@ object Graph {
     val d38 = DecimalType(38, 0)
     val dc = deg.join(nodeBroadcast(comm, nNodes), "node")
       .groupBy("comm").agg(sum(col("d")).as("d_c"))
-    val ec = und
-      .join(nodeBroadcast(
-        comm.select(col("node").as("src"), col("comm").as("cs")), nNodes), "src")
-      .join(nodeBroadcast(
-        comm.select(col("node").as("dst"), col("comm").as("cd")), nNodes), "dst")
+    val ec = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
       .filter(col("cs") === col("cd"))
       .groupBy(col("cs").as("comm")).agg(count(lit(1)).as("e_c"))
     dc.join(ec, Seq("comm"), "left")
@@ -1377,9 +1359,7 @@ object Graph {
   /** Iterated sweeps over any edge frame / partition — spec entry point. */
   private[graft] def louvainIterateFrom(spark: SparkSession, und: DataFrame,
       brand: DataFrame, sweeps: Int): DataFrame = {
-    val deg = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d")).graftCheckpoint(true)
+    val deg = degrees(und).graftCheckpoint(true)
     val m = und.agg(count(lit(1)).as("m")).graftCheckpoint(true)
     // one cheap job over the checkpointed degree frame sizes every
     // broadcast decision across the sweeps (node sets never grow)

@@ -251,7 +251,7 @@ object Similarity {
     val buckets = BucketGuard.capHotBuckets(
       bucketed(e, "vec_id", "vec_id", col("embedding"), 43, PairTables, PairBits),
       Seq("tbl", "bucket"), PairBucketCap)
-    val cand = buckets.as("x").join(CandidateJoin.hinted(buckets.as("y")),
+    val cand = buckets.as("x").join(buckets.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
         col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
@@ -1091,7 +1091,7 @@ object Similarity {
     val cents = sampleCentroids(raw)
     val assigned = nearest(e.select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", cents, 1)
-    val dupOf = assigned.as("a").join(CandidateJoin.hinted(assigned.as("b")),
+    val dupOf = assigned.as("a").join(assigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("sim", round(Vectors.vecCosine(col("a.embedding"), col("b.embedding")), 6))
       .filter(col("sim") >= PairThreshold)
@@ -1174,7 +1174,7 @@ object Similarity {
       else state.index.unionByName(newAssigned)
     // dup delta = every pair whose LATER member is in this batch; its
     // per-vector min is final (all lower ids are already in `all`)
-    val delta = all.as("a").join(CandidateJoin.hinted(newAssigned.as("b")),
+    val delta = all.as("a").join(newAssigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("sim", round(Vectors.vecCosine(col("a.embedding"), col("b.embedding")), 6))
       .filter(col("sim") >= PairThreshold)
@@ -1305,7 +1305,7 @@ object Similarity {
     * new batch's rows for an incremental advance).
     */
   private def scoredCellPairs(left: DataFrame, right: DataFrame): DataFrame =
-    left.as("a").join(CandidateJoin.hinted(right.as("b")),
+    left.as("a").join(right.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
       .groupBy(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
       .agg(first(col("a.embedding")).as("ea"), first(col("b.embedding")).as("eb"))

@@ -3684,8 +3684,9 @@ object TextOps {
   // no window, no self-join); the graph collapses to the DISTINCT
   // bigram vocabulary (sublinear in the corpus, the t89 axis); each
   // round broadcasts the node-sized (rank ⋈ weighted-degree) state
-  // onto the edge list — edges never shuffle to learn ranks (q63's
-  // idiom), and per-edge work is one integer multiply-divide.
+  // onto the edge list while it fits Graph.nodeBroadcast's limit —
+  // edges never shuffle to learn ranks (q63's idiom), and per-edge
+  // work is one integer multiply-divide.
   //
   // Determinism: ranks live on an integer 1e10 grid with floor
   // division (the q63 discipline — 1e10 keeps r·85·w inside int64 at
@@ -3718,23 +3719,26 @@ object TextOps {
       .graftCheckpoint(true)
     val wdeg = e.groupBy(col("src")).agg(sum(col("w")).as("wd"))
     val nodes = wdeg.select(col("src").as("node")).graftCheckpoint(true)
-    val nAgg = nodes.agg(count(lit(1)).as("cnt"))
-    var r = nodes.crossJoin(nAgg)
-      .select(col("node"), expr(s"${TrScale}L div cnt").as("r"))
+    // one cheap job over the checkpointed node frame (q63's pattern):
+    // the measured node count is the rank normalizer (a plan literal)
+    // and sizes every per-round state broadcast
+    val nNodes = nodes.count()
+    // an empty graph has no rows to divide; max(·, 1) keeps the literals
+    // defined without a branch
+    val n = math.max(nNodes, 1L)
+    val base = (TrScale * 15) / (100 * n)
+    var r = nodes.select(col("node"), lit(TrScale / n).as("r"))
     for (_ <- 1 to TrIters) {
-      // node-sized state broadcasts onto the edges (q63: at billions of
-      // nodes drop the hint and the plan degrades to a shuffle join on
-      // src — the edge set still moves only once per round)
+      // above the broadcast limit this degrades to a shuffle join on
+      // src; the edge set still moves only once per round
       val state = r.join(wdeg.withColumnRenamed("src", "node"), "node")
       val contrib = e
-        .join(broadcast(state), col("src") === col("node"))
+        .join(Graph.nodeBroadcast(state, nNodes), col("src") === col("node"))
         .select(col("dst"), expr("(r * 85 * w) div (100 * wd)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      r = nodes.crossJoin(nAgg)
+      r = nodes
         .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (expr(s"(${TrScale}L * 15) div (100 * cnt)") + coalesce(col("inflow"), lit(0L)))
-            .as("r"))
+        .select(col("node"), (lit(base) + coalesce(col("inflow"), lit(0L))).as("r"))
     }
     r.select(col("node").as("word"), col("r"))
       .orderBy(col("r").desc, col("word"))

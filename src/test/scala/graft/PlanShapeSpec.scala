@@ -34,6 +34,33 @@ class PlanShapeSpec extends AnyFunSuite {
       if e.outputPartitioning.isInstanceOf[HashPartitioning] => e }.size
   }
 
+  test("d41 shingle self-join plans ShuffledHashJoin — its measured per-site hint") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val root = Dedup.d41NgramJaccard(spark, dir).queryExecution.executedPlan
+    val plan = root match { case a: AdaptiveSparkPlanExec => a.executedPlan; case p => p }
+    val shj = plan.collect { case j: ShuffledHashJoinExec => j }
+    assert(shj.exists(_.leftKeys.exists(_.references.exists(_.name == "k"))),
+      s"d41's shingle-hash self-join must plan ShuffledHashJoin:\n$plan")
+  }
+
+  test("d42/d43 band self-joins carry no strategy hint — AQE picks") {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    for ((name, df) <- Seq("d42" -> Dedup.d42MinhashLsh(spark, dir),
+                           "d43" -> Dedup.d43Simhash(spark, dir))) {
+      // the inner join on `band` (BucketGuard's hinted anti-join is not)
+      val bandJoins = df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == Inner &&
+          j.condition.exists(_.references.exists(_.name == "band")) => j
+      }
+      assert(bandJoins.nonEmpty, s"$name: expected a band self-join")
+      val hinted = bandJoins.filter(j => j.hint.leftHint.exists(_.strategy.isDefined) ||
+        j.hint.rightHint.exists(_.strategy.isDefined))
+      assert(hinted.isEmpty, s"$name: band self-join must be unhinted:\n${hinted.mkString("\n")}")
+    }
+  }
+
   test("t57 prefix sum windows by source — never a single-task global sort") {
     val plan = optimized(TextOps.t57SequencePack(spark, dir))
     assert(plan.contains("windowspecdefinition(source"),
