@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFiles
+
 /** Canonical session factory for jobs and tests.
   *
   * Settings chosen for the 100 TB design target (see SURVEY.md §4.2):
@@ -10,10 +12,30 @@ import org.apache.spark.sql.SparkSession
   * sized to the local core count rather than the 200 default — on a real
   * cluster this would be `spark.sql.adaptive.coalescePartitions` doing the
   * sizing from `advisoryPartitionSizeInBytes`.
+  *
+  * Streaming checkpoints go through [[graft.streaming.LocalCheckpointFiles]].
+  * Spark's default manager renames each checkpoint file (and its `.crc`)
+  * through FileContext, and on the local FS each rename probes the link
+  * status of its paths; Hadoop 3.4 without libhadoop answers every probe
+  * by forking `readlink`. In one 10 s run of the repository benchmark's
+  * `stream_jobs` workload (three queries, seed 7, 4 cores) that manager
+  * made the JVM fork 4,437 processes, 3,304 of them `readlink` (JFR
+  * `jdk.ProcessStart`); through the FileSystem-based manager the local
+  * rename is one `File.renameTo`, and the same run forked 1,308
+  * processes, none of them `readlink` (the rest are Hadoop's `chmod` on
+  * file create and Spark's `rm -rf`). Non-local schemes keep Spark's
+  * choice.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession.Builder =
+  /** Local threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
+    * else the cores this JVM may use.
+    */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def builder(master: String = s"local[${cpus()}]",
+              shufflePartitions: Int = cpus()): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -31,6 +53,7 @@ object GraftSession {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalCheckpointFiles.ConfKey, classOf[LocalCheckpointFiles].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

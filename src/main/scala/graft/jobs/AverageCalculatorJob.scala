@@ -1,11 +1,11 @@
 package graft.jobs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
 
 import graft.GraftSession
-import graft.streaming.{RunningStats, Sources}
+import graft.streaming.{ProgressLog, RunningStats, Sources}
 
 /** Job 1 of the reference, rebuilt on Structured Streaming: consume JSON
   * readings, maintain cumulative per-key statistics, emit one JSON record
@@ -15,7 +15,8 @@ import graft.streaming.{RunningStats, Sources}
   * (default topic `bms`), Kafka/console out (default console, like the
   * reference's `print()`), `./spark_cache` checkpoint dir (AVG:70), 2 s
   * trigger (AVG:65). A file source replays the events table as the
-  * stream (the sandbox has no broker):
+  * stream (the sandbox has no broker). Each epoch's progress goes to
+  * stderr as one JSON line ([[graft.streaming.ProgressLog]]):
   *
   * {{{
   * sbt "runMain graft.jobs.AverageCalculatorJob \
@@ -26,7 +27,13 @@ object AverageCalculatorJob {
   def main(args: Array[String]): Unit = {
     val conf = JobConfig.parse(args)
     val spark = GraftSession.get()
+    run(spark, conf)
+    spark.stop()
+  }
 
+  def run(spark: SparkSession, conf: JobConfig,
+          progress: StreamingQueryListener = new ProgressLog()): Unit = {
+    spark.streams.addListener(progress)
     val readings: DataFrame =
       if (conf.isFileSource)
         Sources.eventsStream(spark, conf.sourcePath)
@@ -67,6 +74,5 @@ object AverageCalculatorJob {
     val query = writer.start()
     if (conf.once) { query.processAllAvailable(); query.stop() }
     else query.awaitTermination()
-    spark.stop()
   }
 }

@@ -1,17 +1,19 @@
 package graft.jobs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import graft.GraftSession
-import graft.streaming.{Sources, WordCount}
+import graft.streaming.{ProgressLog, Sources, WordCount}
 
 /** Job 2 of the reference, rebuilt on Structured Streaming: extract the
   * tag id from each JSON record, whitespace-tokenize, count tokens PER
   * MICRO-BATCH — counts reset every trigger, the reference's plain
   * `reduceByKey` semantics (KafkaStreamPropertyAggregator.java:59-96,
-  * SURVEY.md §2.4 A1) — and print the first rows of each batch.
+  * SURVEY.md §2.4 A1) — and print the first rows of each batch. Each
+  * epoch's progress goes to stderr as one JSON line
+  * ([[graft.streaming.ProgressLog]]).
   *
   * {{{
   * sbt "runMain graft.jobs.PropertyAggregatorJob \
@@ -22,7 +24,13 @@ object PropertyAggregatorJob {
   def main(args: Array[String]): Unit = {
     val conf = JobConfig.parse(args)
     val spark = GraftSession.get()
+    run(spark, conf)
+    spark.stop()
+  }
 
+  def run(spark: SparkSession, conf: JobConfig,
+          progress: StreamingQueryListener = new ProgressLog()): Unit = {
+    spark.streams.addListener(progress)
     val lines: DataFrame =
       if (conf.isFileSource)
         Sources.eventsStream(spark, conf.sourcePath)
@@ -46,6 +54,5 @@ object PropertyAggregatorJob {
 
     if (conf.once) { query.processAllAvailable(); query.stop() }
     else query.awaitTermination()
-    spark.stop()
   }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{RunningStats, Sources, StreamJoin, WordCount}
+import graft.jobs.{AverageCalculatorJob, JobConfig, PropertyAggregatorJob}
+import graft.streaming.{ProgressLog, RunningStats, Sources, StreamJoin, WordCount}
 
 /** Streaming-semantics tests (SURVEY.md §5.2.2): per-epoch Update-mode
   * emissions match the reference's once-per-updated-key-per-batch cadence
@@ -409,6 +410,38 @@ class StreamingSpec extends AnyFunSuite {
       val byBatch = batches.synchronized(batches.toMap)
       assert(byBatch(0L) == Map("pump" -> 2L, "one" -> 1L, "two" -> 1L))
     } finally q.stop()
+  }
+
+  test("both jobs log one progress JSON line per epoch, consecutive batchIds") {
+    val staged = java.nio.file.Files.createTempDirectory("graft_progress").toString
+    // one parquet directory of 3 files: the glob events*.parquet matches
+    // it and the file source replays one file per epoch
+    spark.range(0, 300).select(
+        concat(lit("tag "), (col("id") % 5).cast("string")).as("event_type"),
+        (col("id") * 0.5).as("value"), timestamp_seconds(col("id")).as("ts"))
+      .repartitionByRange(3, col("ts")).write.parquet(s"$staged/events.parquet")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def progressOf(run: (JobConfig, ProgressLog) => Unit): Seq[Long] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val log = new ProgressLog(new java.io.PrintStream(buf, true, "UTF-8"))
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_progress_ckpt").toString
+      try run(JobConfig(source = s"file:$staged", checkpoint = ckpt,
+        trigger = "0 seconds", once = true), log)
+      finally {
+        org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+        spark.streams.removeListener(log)
+      }
+      val lines = buf.toString("UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+      lines.map { l =>
+        val p = mapper.readTree(l)
+        assert(p.get("durationMs").has("walCommit") && p.get("durationMs").has("addBatch"))
+        p.get("batchId").asLong
+      }
+    }
+    val avg = progressOf((c, log) => AverageCalculatorJob.run(spark, c, log))
+    assert(avg == Seq(0L, 1L, 2L))
+    val agg = progressOf((c, log) => PropertyAggregatorJob.run(spark, c, log))
+    assert(agg == Seq(0L, 1L, 2L))
   }
 
   test("file-replayed events stream converges to the batch stats") {
