@@ -22,9 +22,13 @@ import graft.streaming.LocalCheckpointFiles
   * made the JVM fork 4,437 processes, 3,304 of them `readlink` (JFR
   * `jdk.ProcessStart`); through the FileSystem-based manager the local
   * rename is one `File.renameTo`, and the same run forked 1,308
-  * processes, none of them `readlink` (the rest are Hadoop's `chmod` on
+  * processes, none of them `readlink` (the rest were Hadoop's `chmod` on
   * file create and Spark's `rm -rf`). Non-local schemes keep Spark's
   * choice.
+  *
+  * `file:` paths go through [[NioLocalFileSystem]], which sets the
+  * permission bits of each new file and directory without forking
+  * `chmod`.
   */
 object GraftSession {
   /** Local threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
@@ -54,6 +58,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(LocalCheckpointFiles.ConfKey, classOf[LocalCheckpointFiles].getName)
+      .config(NioLocalFileSystem.ConfKey, classOf[NioLocalFileSystem].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

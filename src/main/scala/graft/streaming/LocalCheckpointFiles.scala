@@ -63,12 +63,17 @@ object LocalCheckpointFiles {
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Spark's FileSystem-based manager, except that `overwriteIfPossible`
-    * replaces an existing destination. The `file:` FileSystem on Spark's
-    * classpath (Hive's `ProxyLocalFileSystem`) refuses to rename onto an
-    * existing file, which Spark's contract accepts as a best effort; the
-    * FileContext manager deletes the destination and then renames
-    * (`AbstractFileSystem.renameInternal`), so a replayed batch rewrites
-    * its state files, and this does the same.
+    * replaces an existing destination. Hadoop's FileSystem contract lets
+    * `rename` refuse an existing destination file, and the `file:`
+    * FileSystem that Spark's classpath picks by default (Hive's
+    * `ProxyLocalFileSystem`) does; Spark's contract accepts that as a
+    * best effort. Graft sessions install [[graft.NioLocalFileSystem]],
+    * whose rename replaces, but Hadoop caches one `file:` FileSystem per
+    * JVM and user, so a JVM whose first local lookup ran without that
+    * setting keeps Proxy. The FileContext manager deletes the destination
+    * and then renames (`AbstractFileSystem.renameInternal`), so a
+    * replayed batch rewrites its state files, and this does the same on
+    * any `file:` FileSystem.
     */
   private[graft] class LocalManager(path: Path, hadoopConf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {

@@ -22,15 +22,6 @@ import org.apache.spark.sql.types._
   */
 object Sources {
 
-  /** The reference's implicit record schema (`AVG:202-214`): note
-    * `readValue` is a JSON *string* carrying a number — the reference does
-    * `getString` then `Double.parseDouble`; here the same two-step is
-    * `from_json` to string + cast to double.
-    */
-  val readingSchema: StructType = StructType(Seq(
-    StructField("readTag_id", StringType),
-    StructField("readValue", StringType)))
-
   /** `topics` is a comma-separated list — the reference subscribes via a
     * `Map<topic, numThreads>` (`AVG:41-45`, one receiver thread pool per
     * topic); the DSv2 equivalents are a multi-topic `subscribe` and
@@ -52,20 +43,42 @@ object Sources {
   }
 
   /** P1 (`AVG:80-81`): Kafka value bytes → (readTag_id, value: double).
+    * The reference's record is `{readTag_id, readValue}` with `readValue` a
+    * JSON *string* carrying a number (`AVG:202-214`: `getString`, then
+    * `Double.parseDouble`); here the two steps are `json_tuple` and
+    * `try_cast`.
+    *
+    * Each record is parsed once. `json_tuple` is a generator, and a
+    * `Generate` is a barrier that filter pushdown cannot copy the parser
+    * through. A parser in a projection (`from_json`, `get_json_object`)
+    * is not: Catalyst pushes the not-null filter below the projection and
+    * copies the parser into the predicate (three `from_json` parses per
+    * record, two `get_json_object`). In the benchmark's `stream_jobs`
+    * workload `from_json` alone took half of the executor CPU samples.
+    *
     * Malformed records produce nulls instead of the reference's
     * task-killing JSONException — filtered, not fatal. That includes a
     * non-numeric `readValue`: `try_cast` yields null where an ANSI cast
-    * would raise `CAST_INVALID_INPUT` and stop the stream.
+    * would raise `CAST_INVALID_INPUT` and stop the stream. Two records
+    * read differently from `from_json`: on a duplicate key the last
+    * non-null value wins (`"readValue":"1","readValue":null` keeps 1.0,
+    * where `from_json` read null; the reference's org.json rejects
+    * duplicate keys outright), and a raw control character inside a
+    * string is accepted, as `get_json_object` accepts it (ReadingParseSpec).
     */
   def parseReadings(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value").cast(StringType), readingSchema).as("j"))
-      .select(col("j.readTag_id").as("readTag_id"),
-        col("j.readValue").try_cast(DoubleType).as("value"))
+    raw.select(json_tuple(col("value").cast(StringType), "readTag_id", "readValue")
+        .as(Seq("readTag_id", "readValue")))
+      .select(col("readTag_id"), col("readValue").try_cast(DoubleType).as("value"))
       .filter(col("readTag_id").isNotNull && col("value").isNotNull)
 
-  /** P2 (`AGG:64-72`): extract just the tag id for the wordcount job. */
+  /** P2 (`AGG:64-72`): extract just the tag id for the wordcount job, with
+    * one parse per record for the reason given at [[parseReadings]]. On a
+    * duplicate `readTag_id` the last one wins, the tag [[parseReadings]]
+    * takes.
+    */
   def extractTagIds(raw: DataFrame): DataFrame =
-    raw.select(get_json_object(col("value").cast(StringType), "$.readTag_id").as("line"))
+    raw.select(json_tuple(col("value").cast(StringType), "readTag_id").as("line"))
       .filter(col("line").isNotNull)
 
   /** Raw on-disk events schema, probed from the parquet footers (the file
