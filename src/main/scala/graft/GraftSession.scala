@@ -29,6 +29,13 @@ import graft.streaming.LocalCheckpointFiles
   * `file:` paths go through [[NioLocalFileSystem]], which sets the
   * permission bits of each new file and directory without forking
   * `chmod`.
+  *
+  * Reliable RDD checkpoints (`spark.graft.checkpointDir`) are written
+  * uncompressed, where Spark 4.1 compresses them by default: the graph
+  * broadcast guard measures a checkpointed frame by its file bytes, and
+  * compressed bytes read 2.6–7.4× under the rows they hold (BroadcastGuardSpec
+  * shapes), which is no upper bound. The files grow by the same factor;
+  * local checkpoints, the default, are not affected.
   */
 object GraftSession {
   /** Local threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
@@ -59,6 +66,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config(LocalCheckpointFiles.ConfKey, classOf[LocalCheckpointFiles].getName)
       .config(NioLocalFileSystem.ConfKey, classOf[NioLocalFileSystem].getName)
+      // reliable checkpoint files hold serialized rows uncompressed, so
+      // their bytes bound the rows from above (Checkpoints.heldBytes)
+      .config("spark.checkpoint.compress", "false")
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -98,6 +98,9 @@ case class Md5Bits60(child: Expression) extends UnaryExpression {
   }
   override def dataType: DataType = LongType
   override def prettyName: String = "md5_bits60"
+  // null exactly when the input is null, so an inferred not-null join
+  // filter tests the input, not a second evaluation of the hash
+  override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
     FastHash.md5Bits60(input.asInstanceOf[UTF8String])
@@ -120,6 +123,7 @@ case class FastMd5(child: Expression) extends UnaryExpression {
   }
   override def dataType: DataType = StringType
   override def prettyName: String = "fast_md5"
+  override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
     FastHash.md5Hex(input.asInstanceOf[UTF8String])
@@ -142,6 +146,7 @@ case class HexBits60(child: Expression, off: Int) extends UnaryExpression {
   }
   override def dataType: DataType = LongType
   override def prettyName: String = "hex_bits60"
+  override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
     FastHash.hexBits60(input.asInstanceOf[UTF8String], off)

@@ -1,6 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.RddBlockBytes
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
 /** Lineage-truncation points for every iterative loop and multi-consumer
@@ -78,6 +84,53 @@ object Checkpoints {
         case Some(base) => ensureDir(spark, base); ds.checkpoint(eager)
         case None => ds.localCheckpoint(eager)
       }
+    }
+  }
+
+  /** Bytes held by the checkpoints `df` reads, or `None` when that is no
+    * bound on `df`'s size. Each materialized checkpoint in `df`'s plan
+    * counts once per occurrence: a local checkpoint at the memory + disk
+    * bytes the block manager holds for its blocks, a reliable one at the
+    * bytes of its part files. The figure needs no job and is an upper
+    * bound only while nothing above the checkpoints multiplies rows, so
+    * the plan may hold nothing but checkpoints and row-preserving or
+    * row-reducing operators (projections, filters, aggregates, windows,
+    * unions, limits, semi/anti joins, and joins with a side of at most
+    * one row). Any other leaf (a file scan, a local relation, a lazy
+    * checkpoint not yet materialized) or operator (`Generate`, `Expand`,
+    * a general join, typed operators) gives `None`. A projection that
+    * adds columns can still widen each row a little; the figure is a
+    * guard, not an exact size.
+    */
+  private[graft] def heldBytes(df: DataFrame): Option[Long] = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    // a hinted side (`crossJoin(broadcast(total))`) hides its child's maxRows
+    def oneRow(p: LogicalPlan): Boolean = p match {
+      case h: ResolvedHint => oneRow(h.child)
+      case _ => p.maxRows.exists(_ <= 1)
+    }
+    def bounded(p: LogicalPlan): Boolean = p match {
+      case r: LogicalRDD => r.rdd.isCheckpointed && { held += r.rdd; true }
+      case j: Join if !(j.joinType == LeftSemi || j.joinType == LeftAnti ||
+          oneRow(j.left) || oneRow(j.right)) => false
+      case _: Join | _: Project | _: Filter | _: Aggregate | _: Window | _: Sort
+          | _: Distinct | _: Deduplicate | _: Union | _: Intersect | _: Except
+          | _: SubqueryAlias | _: ResolvedHint | _: RepartitionOperation | _: Sample
+          | _: GlobalLimit | _: LocalLimit => p.children.forall(bounded)
+      case _ => false
+    }
+    if (!bounded(df.queryExecution.analyzed)) None
+    else {
+      val sc = df.sparkSession.sparkContext
+      val (reliable, local) = held.toSeq.partition(_.getCheckpointFile.isDefined)
+      val blockBytes =
+        if (local.isEmpty) Map.empty[Int, Long] else RddBlockBytes(sc, local.map(_.id).toSet)
+      val fileBytes = reliable.map { r =>
+        val dir = new Path(r.getCheckpointFile.get)
+        dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir)
+          .filter(_.getPath.getName.startsWith("part-")).map(_.getLen).sum
+      }
+      Some(fileBytes.sum + local.map(r => blockBytes.getOrElse(r.id, 0L)).sum)
     }
   }
 

@@ -787,21 +787,26 @@ object Curation {
   // -------------------------------------------------------------------
   def c77SourceDatasheet(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
+    // null-safe on h over non-null texts: an equi-join on h infers
+    // isnotnull(h), which Catalyst pushes below the projection as
+    // isnotnull(fast_md5(text)), hashing every document twice
+    val base = docs.filter(col("text").isNotNull)
       .select(col("source"), col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast(LongType).as("n_tokens"),
         graft.functions.HashFns.fastMd5(col("text")).as("h"))
-    val dup = base.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
+    val dup = base.groupBy(col("h").as("dh")).agg(count(lit(1)).as("cnt"))
     val chunkDup = Dedup.d47ChunkDedup(spark, dir)
       .select(col("doc_id"),
         when(col("n_dup_chunks") > 0, 1L).otherwise(0L).as("cdup"))
     val gate = TextOps.t55Metrics(spark, dir)
       .select(col("doc_id"), col("passes_gate").cast(LongType).as("pg"))
-    val perDoc = base.join(dup, "h").join(chunkDup, "doc_id").join(gate, "doc_id")
+    val perDoc = base.join(dup, col("h") <=> col("dh"))
+      .join(chunkDup, "doc_id").join(gate, "doc_id")
       .withColumn("is_dup", when(col("cnt") > 1, 1L).otherwise(0L))
     val wl = Window.partitionBy(col("source"))
       .orderBy(col("lc").desc, col("lang").asc)
-    val ls = base.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("lc"))
+    val ls = docs.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("lc"))
       .withColumn("lrn", row_number().over(wl))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_langs"),

@@ -494,16 +494,16 @@ object Dedup {
   // library; two paths, chosen by the MEASURED size of the pair list:
   //
   //  - Local finish (the common case — near-dup pair lists are orders
-  //    smaller than the corpus). When the symmetric pair frame fits the
-  //    broadcast bound every node-sized frame the driver may hold already
-  //    obeys (`spark.graft.graph.broadcastLimit`, rows × fixed row
-  //    bytes, [[Graph.withinBroadcastLimit]]), it is collected once and
-  //    resolved by union-find over primitive arrays, the root of every
-  //    set being its minimum id. Two jobs after the pair checkpoint (a
-  //    count and a collect) instead of ~12 per contraction round; the
-  //    driver's working set (collected pairs, id and parent arrays, the
-  //    result rows) is a small constant multiple of that same bound, as
-  //    a broadcast's collect-and-build is.
+  //    smaller than the corpus). When the checkpointed symmetric pair
+  //    frame fits the broadcast bound every node-sized frame the driver
+  //    may hold already obeys (`spark.graft.graph.broadcastLimit`,
+  //    measured as the bytes the checkpoint holds, [[Graph.fitsBroadcast]]
+  //    — no job), it is collected once and resolved by union-find over
+  //    primitive arrays, the root of every set being its minimum id. One
+  //    collect after the pair checkpoint instead of ~12 jobs per
+  //    contraction round; the driver's working set (collected pairs, id
+  //    and parent arrays, the result rows) is a small constant multiple
+  //    of that same bound, as a broadcast's collect-and-build is.
   //  - Distributed contraction, the only path for pair lists the driver
   //    cannot hold — iterative min-label propagation on the contracted
   //    label graph:
@@ -550,7 +550,7 @@ object Dedup {
       case LongType | IntegerType => true
       case _ => false
     }
-    if (integralIds && Graph.withinBroadcastLimit(sym, sym.count())) localComponents(sym)
+    if (integralIds && Graph.fitsBroadcast(sym)) localComponents(sym)
     else distributedComponents(sym)
   }
 

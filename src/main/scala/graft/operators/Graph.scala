@@ -18,7 +18,7 @@ import graft.operators.Checkpoints.GraftCheckpointOps
   * orders (per-order fan-out is bounded by order size, ~4 lineitems).
   * Each PageRank round is ONE shuffle: the frozen, checkpointed edges
   * join the node-sized outflow (a size-conditional broadcast, see
-  * [[nodeBroadcast]]), the node state's own rows ride the same union,
+  * [[boundedBroadcast]]), the node state's own rows ride the same union,
   * and one hash aggregate by node yields the next (node, rank, degree)
   * state, which is checkpointed — so a round is a broadcast job, a map
   * stage and a result stage, and its plan never grows with the round
@@ -36,58 +36,33 @@ object Graph {
   private val PrScale = 1000000000000L // 1e12 rank grid
   private val PrIters = 5
 
-  /** Size-conditional broadcast for node-sized iteration state (VERDICT
-    * r17 item 4). The forced `broadcast()` on rank/score/alive frames is
-    * what keeps the corpus-sized EDGE set unshuffled per round — but a
-    * hint unconditionally overrides size-based planning, and the graph
-    * family is the one plan family whose 100× behavior is a hard failure
-    * (driver/executor OOM building a multi-GB broadcast hash table)
-    * rather than a slowdown. This helper broadcasts only while the
-    * frame's measured size stays under `spark.graft.graph.broadcastLimit`
-    * bytes (default 256 MiB): `nodeRows` is a REAL count off the
-    * already-checkpointed base frame (one cheap job per query, not per
-    * round — node sets only shrink across iterations, so the initial
-    * count is a sound upper bound), times the schema's fixed-width row
-    * size. Catalyst's own size-only estimate is useless here — its
-    * default for a Join is the PRODUCT of child sizes, so every
-    * join-derived score frame reads as astronomically large at any SF.
-    * Above the limit the frame is returned unhinted and AQE picks the
-    * strategy from runtime statistics (a shuffle join on the key — the
-    * edges still move only once per round). Round18Spec pins broadcast
-    * below the threshold and non-broadcast above it, oracles unchanged.
-    * Scalar 1-row broadcasts (totals, k thresholds) stay unconditional —
-    * they cannot outgrow anything.
+  /** `df` with a broadcast hint iff it [[fitsBroadcast]], else as it
+    * is. The hint keeps the corpus-sized side of a join unshuffled; a
+    * frame that does not fit, or whose size is not known, goes out
+    * unhinted, and Catalyst and AQE pick the join from their own
+    * statistics. A hint overrides size-based planning, so an unbounded
+    * one is a driver/executor OOM at 100× scale, not a slowdown.
+    * Round18Spec pins the hint below the limit and its absence above it,
+    * rows unchanged; BroadcastGuardSpec pins wide rows and a hub node.
+    * One-row scalar broadcasts (totals, thresholds) stay unconditional.
     */
-  private val BroadcastLimitKey = "spark.graft.graph.broadcastLimit"
+  private[graft] def boundedBroadcast(df: DataFrame): DataFrame =
+    if (fitsBroadcast(df)) broadcast(df) else df
 
-  private[operators] def nodeBroadcast(df: DataFrame, nodeRows: Long): DataFrame =
-    if (withinBroadcastLimit(df, nodeRows)) broadcast(df) else df
-
-  /** Whether `rows` rows of `df`'s fixed-width schema fit under
-    * `spark.graft.graph.broadcastLimit` — the one bound on node-sized
-    * frames the driver may hold, shared by [[nodeBroadcast]] and the
-    * driver-side finish of [[Dedup.connectedComponents]].
+  /** Whether `df` is measured at most `spark.graft.graph.broadcastLimit`
+    * bytes (default 256 MiB): [[Checkpoints.heldBytes]], the bytes of the
+    * checkpoints it reads, read without a job. A frame that is not read
+    * from checkpoints has no measure and does not fit. The figure is an
+    * upper bound on the rows a broadcast would hold (a local checkpoint
+    * of (long, long) rows holds ~84 B/row against 24 B of row data), and
+    * the limit is a guard, not a target.
     */
-  private[operators] def withinBroadcastLimit(df: DataFrame, rows: Long): Boolean = {
-    // fixed-width schemas only at these sites; +24 B/row for the hash
-    // relation's entry overhead
-    val rowBytes = df.schema.map(_.dataType.defaultSize.toLong).sum + 24L
-    rows <= broadcastLimit(df.sparkSession) / rowBytes
-  }
+  private[graft] def fitsBroadcast(df: DataFrame): Boolean =
+    Checkpoints.heldBytes(df).exists(_ <= broadcastLimit(df.sparkSession))
 
   private def broadcastLimit(spark: SparkSession): Long =
-    spark.conf.getOption(BroadcastLimitKey).map(_.toLong).getOrElse(256L << 20)
-
-  /** The same size-conditional broadcast for frames whose byte size the
-    * caller must estimate itself (variable-width rows — e.g. the q66/q82
-    * adjacency arrays, whose TOTAL payload is edge-bounded even though
-    * the frame is node-keyed). Same limit, same degrade-to-shuffle-join
-    * behavior above it (r19 — these sites were forced `broadcast()`
-    * hints with a "drop the hints manually on a big graph" comment, the
-    * hazard class VERDICT r17 item 4 flagged).
-    */
-  private[operators] def sizedBroadcast(df: DataFrame, estBytes: Long): DataFrame =
-    if (estBytes <= broadcastLimit(df.sparkSession)) broadcast(df) else df
+    spark.conf.getOption("spark.graft.graph.broadcastLimit").map(_.toLong)
+      .getOrElse(256L << 20)
 
   /** Undirected degree of a (src, dst) edge frame: (node, d), each
     * endpoint counting the edge once.
@@ -99,16 +74,16 @@ object Graph {
 
   /** `und` with column `attr` of the node-keyed frame `nodes` attached at
     * both endpoints, as `srcAs` and `dstAs` — two size-conditional
-    * broadcast joins (`nodeRows` bounds the node count), so the edge set
-    * is not shuffled to learn its endpoints' attributes.
+    * broadcast joins, so the edge set is not shuffled to learn its
+    * endpoints' attributes.
     */
   private def withEndpoints(und: DataFrame, nodes: DataFrame, attr: String,
-      srcAs: String, dstAs: String, nodeRows: Long): DataFrame =
+      srcAs: String, dstAs: String): DataFrame =
     und
-      .join(nodeBroadcast(
-        nodes.select(col("node").as("src"), col(attr).as(srcAs)), nodeRows), "src")
-      .join(nodeBroadcast(
-        nodes.select(col("node").as("dst"), col(attr).as(dstAs)), nodeRows), "dst")
+      .join(boundedBroadcast(
+        nodes.select(col("node").as("src"), col(attr).as(srcAs))), "src")
+      .join(boundedBroadcast(
+        nodes.select(col("node").as("dst"), col(attr).as(dstAs))), "dst")
 
   /** (src, dst) co-purchase edges and the (node, d) node list with
     * per-source out-degrees — each `graftCheckpoint`ed: the edge set is
@@ -141,9 +116,8 @@ object Graph {
 
   def q63PageRank(spark: SparkSession, dir: String): DataFrame = {
     val (e, nodes) = projection(spark, dir)
-    // one cheap job over the checkpointed node frame: the measured node
-    // count is the rank normalizer (a plan literal) and sizes every
-    // per-round broadcast decision
+    // one cheap job over the checkpointed node frame: the node count is
+    // the rank normalizer (a plan literal)
     val nNodes = nodes.count()
     // an empty graph has no rows to divide; max(·, 1) keeps the literals
     // defined without a branch
@@ -152,12 +126,12 @@ object Graph {
     var st = nodes.select(col("node"), lit(PrScale / n).as("r"), col("d"))
     for (_ <- 1 to PrIters) {
       // per-source outflow from the node-sized state: it broadcasts —
-      // size-conditionally, see nodeBroadcast — and the EDGES NEVER
+      // size-conditionally, see boundedBroadcast — and the EDGES NEVER
       // SHUFFLE. At billions of nodes the state outgrows the limit and
       // the same plan degrades to a shuffle join on src.
       val outflow = st.filter(col("d") > 0)
         .select(col("node").as("src_n"), expr("(r * 85) div (100 * d)").as("c"))
-      val inflow = e.join(nodeBroadcast(outflow, nNodes), col("src") === col("src_n"))
+      val inflow = e.join(boundedBroadcast(outflow), col("src") === col("src_n"))
         .select(col("dst").as("node"), col("c"), lit(0L).as("d"))
       // the state's own zero-inflow rows keep every node (and its degree)
       // in the one aggregate: rank = teleport share + Σ inflow, exactly
@@ -241,29 +215,24 @@ object Graph {
       .distinct().graftCheckpoint(true)
   }
 
-  /** Undirected co-purchase edges, their degree-ordered orientation, and
-    * the undirected edge count m (one job off the checkpointed frame,
-    * reused by the callers' broadcast sizing so q66/q82 don't re-count) —
+  /** Undirected co-purchase edges and their degree-ordered orientation —
     * exposed for GraphPhashSpec's out-degree-bound pin.
     */
   private[graft] def orientedCoPurchase(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Long) = {
+      : (DataFrame, DataFrame) = {
     val und = undirectedCoPurchase(spark, dir)
-    // one cheap job over the checkpointed edge frame: bounds every
-    // broadcast decision below (nodes with degree ≥ 1 number ≤ 2m)
-    val m = und.count()
-    // the degree frame is node-sized, so both orientation lookups are
-    // size-conditional broadcast joins (r19)
-    val deg = degrees(und)
+    // the degree frame is node-sized and checkpointed, so both
+    // orientation lookups are broadcast joins sized by its own bytes
+    val deg = degrees(und).graftCheckpoint(true)
     // orient small-(deg, id) endpoint → large
-    val or = withEndpoints(und, deg, "d", "ds", "dd", 2 * m)
+    val or = withEndpoints(und, deg, "d", "ds", "dd")
       .select(
         when(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")),
           col("src")).otherwise(col("dst")).as("u"),
         when(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")),
           col("dst")).otherwise(col("src")).as("v"))
       .graftCheckpoint(true)
-    (und, or, m)
+    (und, or)
   }
 
   /** Sorted out-neighborhood per oriented source — node-sized (Σ outdeg =
@@ -277,8 +246,24 @@ object Graph {
   private def orientedAdjacency(or: DataFrame): DataFrame =
     or.groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("nbrs"))
 
+  /** Each oriented (u, v) edge with both endpoints' sorted
+    * out-neighborhoods attached, as `nu` and `nv`. The adjacency is
+    * node-keyed but its payload is edge-bounded (Σ outdeg = m longs); it
+    * is measured by the bytes of the checkpointed `or` it aggregates, and
+    * above the limit both lookups degrade to edge-linear shuffle joins —
+    * still never wedges.
+    */
+  private[graft] def withAdjacency(or: DataFrame): DataFrame = {
+    val adj = orientedAdjacency(or)
+    or
+      .join(boundedBroadcast(adj.select(col("u").as("ju"), col("nbrs").as("nu"))),
+        col("u") === col("ju"))
+      .join(boundedBroadcast(adj.select(col("u").as("jv"), col("nbrs").as("nv"))),
+        col("v") === col("jv"))
+  }
+
   def q66Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val (und, or, mEdges) = orientedCoPurchase(spark, dir)
+    val (und, or) = orientedCoPurchase(spark, dir)
     // Count via per-edge out-neighborhood intersection, NOT the explicit
     // wedge self-join: materializing wedges shuffles Σ outdeg² rows
     // (36M on this co-purchase graph — measured 14.5 s), while the
@@ -286,22 +271,7 @@ object Graph {
     // arrays attached and never materializes a wedge row (3.5 s). The
     // orientation caps every array at √(2m), so a row is ≤ O(√m) wide —
     // per-edge work Σ (outdeg(u)+outdeg(v)), the compact-forward bound.
-    // adj is node-sized (Σ outdeg = m longs total) and broadcasts here;
-    // on a graph where it doesn't fit, drop the hints and the same plan
-    // degrades to two edge-linear shuffle joins — still never wedges.
-    val adj = orientedAdjacency(or)
-    // adj is node-keyed but its PAYLOAD is edge-bounded (Σ outdeg = m
-    // longs): estimate ≤ m·(8 payload) + rows·(8 key + 24 entry + 16
-    // array header), rows ≤ m — r19, was a forced hint with a manual
-    // "drop the hints on a big graph" note; now it degrades by itself
-    val adjBytes = 56L * mEdges
-    val tri = or
-      .join(sizedBroadcast(
-        adj.select(col("u").as("ju"), col("nbrs").as("nu")), adjBytes),
-        col("u") === col("ju"))
-      .join(sizedBroadcast(
-        adj.select(col("u").as("jv"), col("nbrs").as("nv")), adjBytes),
-        col("v") === col("jv"))
+    val tri = withAdjacency(or)
       .select(size(array_intersect(col("nu"), col("nv"))).cast(LongType).as("c"))
       .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
     val nodes = und.select(col("src").as("node"))
@@ -362,17 +332,8 @@ object Graph {
   // 3 rows per triangle; degree and corner tables are node-sized.
   // ---------------------------------------------------------------------
   def q82ClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val (und, or, mEdges) = orientedCoPurchase(spark, dir)
-    val adj = orientedAdjacency(or)
-    // same edge-bounded adjacency estimate as q66 (r19, was forced)
-    val adjBytes = 56L * mEdges
-    val corners = or
-      .join(sizedBroadcast(
-        adj.select(col("u").as("ju"), col("nbrs").as("nu")), adjBytes),
-        col("u") === col("ju"))
-      .join(sizedBroadcast(
-        adj.select(col("u").as("jv"), col("nbrs").as("nv")), adjBytes),
-        col("v") === col("jv"))
+    val (und, or) = orientedCoPurchase(spark, dir)
+    val corners = withAdjacency(or)
       .select(col("u"), col("v"), explode(array_intersect(col("nu"), col("nv"))).as("w"))
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
     val tri = corners.groupBy(col("node")).agg(count(lit(1)).as("tri"))
@@ -425,10 +386,8 @@ object Graph {
 
   def q67KHopReach(spark: SparkSession, dir: String): DataFrame = {
     val (e, nodes) = projection(spark, dir)
-    // one cheap job off the checkpointed node frame sizes the per-round
-    // broadcast decisions (frontier/visited are ≤ node-sized) — r19,
-    // these joins were unhinted and relied on sub-10 MB auto-broadcast
-    val nNodes = nodes.count()
+    // frontier and visited are checkpointed and ≤ node-sized: each round
+    // broadcasts them while their bytes fit the limit
     val seeds = nodes.where(col("node") % 500 === 0).select(col("node"))
       .graftCheckpoint(true)
     var visited = seeds
@@ -442,10 +401,9 @@ object Graph {
     // total at any SF.
     val frontiers = scala.collection.mutable.ArrayBuffer[DataFrame](seeds)
     for (_ <- 1 to KhopRounds) {
-      frontier = e.join(
-          nodeBroadcast(frontier.withColumnRenamed("node", "src"), nNodes), "src")
+      frontier = e.join(boundedBroadcast(frontier.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node")).distinct()
-        .join(nodeBroadcast(visited, nNodes), Seq("node"), "left_anti")
+        .join(boundedBroadcast(visited), Seq("node"), "left_anti")
         .graftCheckpoint(true)
       frontiers += frontier
       visited = visited.union(frontier).graftCheckpoint(true)
@@ -494,9 +452,6 @@ object Graph {
 
   def q87WeightedPath(spark: SparkSession, dir: String): DataFrame = {
     val (e, nodes) = projection(spark, dir)
-    // node count for the per-round broadcast decisions (dist is
-    // node-sized) — r19, same rationale as q67/q63
-    val nNodes = nodes.count()
     val we = e.groupBy(col("src"), col("dst"))
       .agg(expr("1000000L div count(1)").as("cost"))
       .graftCheckpoint(true)
@@ -504,8 +459,7 @@ object Graph {
       .select(col("node"), lit(0L).as("d")).graftCheckpoint(true)
     for (_ <- 1 to SsspRounds) {
       val relaxed = we
-        .join(nodeBroadcast(
-          dist.select(col("node").as("src"), col("d").as("ds")), nNodes), "src")
+        .join(boundedBroadcast(dist.select(col("node").as("src"), col("d").as("ds"))), "src")
         .select(col("dst").as("node"), (col("ds") + col("cost")).as("d"))
       dist = dist.union(relaxed).groupBy(col("node")).agg(min(col("d")).as("d"))
         .graftCheckpoint(true)
@@ -568,12 +522,11 @@ object Graph {
     * entry point.
     */
   private[graft] def assortativityFrom(und: DataFrame): DataFrame = {
-    // nodes with degree ≥ 1 number ≤ 2m — one cheap count bounds the
-    // degree-frame broadcast (r19, was a forced hint)
-    val mEdges = und.count()
-    val deg = degrees(und)
+    // checkpointed, the node-sized degree frame is measured for its two
+    // broadcasts onto the edge list
+    val deg = degrees(und).graftCheckpoint(true)
     val dec = DecimalType(38, 0)
-    val m = withEndpoints(und, deg, "d", "ds", "dd", 2 * mEdges)
+    val m = withEndpoints(und, deg, "d", "ds", "dd")
       .agg(count(lit(1)).as("n_edges"),
         sum((col("ds") + col("dd")).cast(dec)).as("sx"),
         sum(col("ds").cast(dec) * col("ds") + col("dd").cast(dec) * col("dd")).as("sxx"),
@@ -660,12 +613,9 @@ object Graph {
         .select(col(key),
           expr(s"$raw div greatest(1L, CAST(t div ${HitsScale}L AS BIGINT))").as(out))
     }
-    // measured bipartite node counts (one job over the checkpointed edge
-    // frame) size the per-half-iteration score broadcasts; the 1-row
-    // normalization totals stay unconditionally broadcast
-    val sides = e.agg(countDistinct(col("c")).as("nc"),
-      countDistinct(col("p")).as("np")).first()
-    val nSide = math.max(sides.getLong(0), sides.getLong(1))
+    // the per-half-iteration score frames broadcast while the bytes of
+    // the checkpoints they read fit the limit; the 1-row normalization
+    // totals stay unconditionally broadcast
     for (_ <- 1 to HitsIters) {
       // checkpoint each half-iteration's RAW node-sized aggregate: it has
       // two consumers (the normalization total and the normalized frame),
@@ -674,11 +624,11 @@ object Graph {
       // per reference (604-operator / 308-Exchange plan,
       // plans/r18/q115_hits_before.txt); with the checkpoint each
       // half-step is ONE edge-pass aggregate (r18, guide §2.4)
-      val hRaw = e.join(nodeBroadcast(a, nSide), "p")
+      val hRaw = e.join(boundedBroadcast(a), "p")
         .groupBy(col("c")).agg(sum(col("a")).as("hr"))
         .graftCheckpoint(true)
       val h = normalize(hRaw, "c", "hr", "h")
-      val aRaw = e.join(nodeBroadcast(h, nSide), "c")
+      val aRaw = e.join(boundedBroadcast(h), "c")
         .groupBy(col("p")).agg(sum(col("h")).as("ar"))
         .graftCheckpoint(true)
       a = normalize(aRaw, "p", "ar", "a")
@@ -759,19 +709,12 @@ object Graph {
     // symmetric closure: per-node degree = COUNT over outgoing rows
     val e0 = und.union(und.select(col("d").as("s"), col("s").as("d")))
       .graftCheckpoint(true)
-    // k = (7 · 2|E|) div (10 · |N|) — one bounded aggregate, broadcast
-    // back; checkpointed (r18): the threshold is consumed twice per
-    // round, and un-pinned each broadcast re-ran the countDistinct
-    // aggregate over the full edge set — 16 edge-scale jobs for one
-    // constant
-    val kv = e0.agg((count(lit(1)) * lit(7L)).as("ke"),
+    // k = (7 · 2|E|) div (10 · |N|) — one bounded aggregate over the
+    // checkpointed edges, read once and used as a plan literal (null on
+    // an empty graph, as in the oracle)
+    val k = lit(e0.agg((count(lit(1)) * lit(7L)).as("ke"),
         (countDistinct(col("s")) * lit(10L)).as("kn"))
-      .select(expr("ke div kn").as("k"))
-      .graftCheckpoint(true)
-    // measured node count (one aggregate over the checkpointed edge
-    // frame) sizes the removed-set broadcasts; removed sets only shrink
-    // after the first peel, so the initial count is a sound upper bound
-    val nNodes = e0.agg(countDistinct(col("s")).as("n")).first().getLong(0)
+      .select(expr("ke div kn")).first().get(0)).cast(LongType)
     // r18: INCREMENTAL peeling. The r17 shape re-filtered the whole edge
     // set by two alive-broadcast joins and re-aggregated full degrees
     // every round (~10 s executor run per round at sf0.1, 8 rounds). The
@@ -789,12 +732,11 @@ object Graph {
     // decrements — same all-alive output as the re-filtering form.
     var deg = e0.groupBy(col("s").as("n")).agg(count(lit(1)).as("c"))
       .graftCheckpoint(true)
-    def removedOf(d: DataFrame): DataFrame =
-      d.crossJoin(broadcast(kv)).filter(col("c") < col("k")).select(col("n"))
+    def removedOf(d: DataFrame): DataFrame = d.filter(col("c") < k).select(col("n"))
     def decremented(d: DataFrame, removed: DataFrame): DataFrame = {
-      val dec = e0.join(nodeBroadcast(removed.select(col("n").as("d")), nNodes), "d")
+      val dec = e0.join(boundedBroadcast(removed.select(col("n").as("d"))), "d")
         .groupBy(col("s").as("n")).agg(count(lit(1)).as("dec"))
-      d.crossJoin(broadcast(kv)).filter(col("c") >= col("k"))
+      d.filter(col("c") >= k)
         .select(col("n"), col("c"))
         .join(dec, Seq("n"), "left")
         .select(col("n"), (col("c") - coalesce(col("dec"), lit(0L))).as("c"))
@@ -805,8 +747,7 @@ object Graph {
     // c ≥ k, and their core degree is deg_9 (one more decrement by the
     // round-8 removals = neighbors inside alive_8 exactly)
     decremented(deg, removedOf(deg))
-      .crossJoin(broadcast(kv))
-      .select(col("n").as("node"), col("c").as("core_degree"), col("k"))
+      .select(col("n").as("node"), col("c").as("core_degree"), k.as("k"))
       .orderBy(col("node"))
   }
 
@@ -878,13 +819,13 @@ object Graph {
     * spec entry point.
     */
   private[graft] def richClubFrom(spark: SparkSession, und: DataFrame): DataFrame = {
-    // same ≤ 2m node bound for the degree-frame broadcasts (r19)
-    val mEdges = und.count()
-    val deg = degrees(und)
+    // the node-sized degree frame, checkpointed: it is measured for the
+    // broadcasts onto the edge list and read by both histograms
+    val deg = degrees(und).graftCheckpoint(true)
     // two consumers (threshold scan + club counts) of a degree-bounded frame
     val degHist = deg.groupBy(col("d")).agg(count(lit(1)).as("nd"))
       .graftCheckpoint(false)
-    val edgeHist = withEndpoints(und, deg, "d", "ds", "dd", 2 * mEdges)
+    val edgeHist = withEndpoints(und, deg, "d", "ds", "dd")
       .select(least(col("ds"), col("dd")).as("md"))
       .groupBy(col("md")).agg(count(lit(1)).as("ne"))
     // exact decile thresholds from the cumulative degree histogram; the
@@ -990,15 +931,14 @@ object Graph {
     */
   private[graft] def modularityFrom(und: DataFrame, comm: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    // one cheap count of the node-sized partition frame (q153 passes a
-    // checkpointed LPA labeling, q135 a part-table projection) sizes the
-    // three broadcasts — r19, were forced hints
-    val nNodes = comm.count()
+    // the node-sized partition broadcasts while it is measured within the
+    // limit (q153's checkpointed LPA labeling); q135's part-table
+    // projection has no measure and is left to Catalyst's statistics
     val deg = degrees(und)
-    val dc = deg.join(nodeBroadcast(comm, nNodes), "node")
+    val dc = deg.join(boundedBroadcast(comm), "node")
       .groupBy(col("comm"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("d_c"))
-    val ec = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
+    val ec = withEndpoints(und, comm, "comm", "cs", "cd")
       .filter(col("cs") === col("cd"))
       .groupBy(col("cs").as("comm")).agg(count(lit(1)).as("e_c"))
     val m = und.agg(count(lit(1)).as("m"))
@@ -1121,18 +1061,18 @@ object Graph {
     * and the strict-positivity gate is `−gain < 0`.
     */
   private def louvainSweepCore(und: DataFrame, deg: DataFrame, m: DataFrame,
-      comm: DataFrame, qName: String, nNodes: Long): (DataFrame, DataFrame) = {
+      comm: DataFrame, qName: String): (DataFrame, DataFrame) = {
     val d38 = DecimalType(38, 0)
     // edges annotated with both endpoint communities → k_{i,c}; the
     // node-sized partition broadcasts size-conditionally (r19 — these
     // were forced broadcast() hints, the exact 100×-scale OOM hazard
-    // nodeBroadcast exists for; below the limit the plan is unchanged)
-    val ec2 = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
+    // boundedBroadcast exists for)
+    val ec2 = withEndpoints(und, comm, "comm", "cs", "cd")
     val kic = ec2.select(col("src").as("node"), col("cd").as("c"))
       .union(ec2.select(col("dst").as("node"), col("cs").as("c")))
       .groupBy(col("node"), col("c")).agg(count(lit(1)).as("k_ic"))
       .graftCheckpoint(true)
-    val ctx = deg.join(nodeBroadcast(comm, nNodes), "node")
+    val ctx = deg.join(boundedBroadcast(comm), "node")
       .join(kic.select(col("node"), col("c").as("comm"), col("k_ic").as("e_ia")),
         Seq("node", "comm"), "left")
       .na.fill(0L, Seq("e_ia"))
@@ -1149,14 +1089,12 @@ object Graph {
     // broadcasts into the edge-bounded kic frame (size-conditionally) so
     // the gains join never re-shuffles kic per sweep; above the limit it
     // degrades to the old shuffle join
-    val gains = nodeBroadcast(ctx, nNodes).join(kic, "node")
+    val gains = boundedBroadcast(ctx).join(kic, "node")
       .filter(col("c") =!= col("comm"))
       // dc is per-community (≤ node-sized; 1 community per node in the
       // worst partition) — same size-conditional discipline (r19)
-      .join(nodeBroadcast(
-        dc.select(col("comm"), col("d_c").as("d_a")), nNodes), "comm")
-      .join(nodeBroadcast(
-        dc.select(col("comm").as("c"), col("d_c").as("d_b")), nNodes), "c")
+      .join(boundedBroadcast(dc.select(col("comm"), col("d_c").as("d_a"))), "comm")
+      .join(boundedBroadcast(dc.select(col("comm").as("c"), col("d_c").as("d_b"))), "c")
       .crossJoin(broadcast(m))
       .withColumn("gain_num",
         lit(2L).cast(d38) * col("m") * (col("k_ic") - col("e_ia"))
@@ -1189,22 +1127,22 @@ object Graph {
     // same scalar.
     val deg = degrees(und).graftCheckpoint(true)
     val m = und.agg(count(lit(1)).as("m")).graftCheckpoint(true)
-    // one cheap job over the checkpointed degree frame: the measured
-    // node count that sizes every broadcast decision in the sweep
-    val nNodes = deg.count()
-    val nodes = deg.join(nodeBroadcast(comm, nNodes), "node")
+    val nodes = deg.join(boundedBroadcast(comm), "node")
       .graftCheckpoint(true) // node, d, comm
     val comm0 = nodes.select(col("node"), col("comm"))
     val dc = nodes.groupBy("comm").agg(count(lit(1)).as("n_before"))
     // the move set has three consumers (comm1, n_in, n_out) — one
     // materialization serves all (the q151 idiom); q_before rides the
     // core's own checkpointed context for free
-    val (mv0, qBefore) = louvainSweepCore(und, deg, m, comm0, "q_before", nNodes)
+    val (mv0, qBefore) = louvainSweepCore(und, deg, m, comm0, "q_before")
     val moves = Checkpoints.fresh(mv0, "node", "old_comm", "new_comm")
-    val comm1 = comm0
+    // the post-move partition is checkpointed as q151's is, so the Q
+    // reading's broadcasts of it are measured
+    val comm1 = Checkpoints.fresh(comm0
       .join(moves.select(col("node"), col("new_comm")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("new_comm"), col("comm")).as("comm"))
-    val qAfter = modularityQFrame(und, deg, m, comm1, "q_after", nNodes)
+      .select(col("node"), coalesce(col("new_comm"), col("comm")).as("comm")),
+      "node", "comm")
+    val qAfter = modularityQFrame(und, deg, m, comm1, "q_after")
     val nIn = moves.groupBy(col("new_comm").as("comm")).agg(count(lit(1)).as("n_in"))
     val nOut = moves.groupBy(col("old_comm").as("comm")).agg(count(lit(1)).as("n_out"))
     dc.select(col("comm"), col("n_before"))
@@ -1324,19 +1262,19 @@ object Graph {
     * the reading is bit-identical to q135/q154's q column.
     */
   private def modularityQ(und: DataFrame, deg: DataFrame, m: DataFrame,
-      comm: DataFrame, nNodes: Long): Double =
-    modularityQFrame(und, deg, m, comm, "q", nNodes).head().getDouble(0)
+      comm: DataFrame): Double =
+    modularityQFrame(und, deg, m, comm, "q").head().getDouble(0)
 
   /** The same exact-integer Q reading as a LAZY 1-row frame, so a
     * single-plan consumer (q154's sweep report) can attach it by
     * broadcast crossJoin instead of a driver action.
     */
   private def modularityQFrame(und: DataFrame, deg: DataFrame, m: DataFrame,
-      comm: DataFrame, out: String, nNodes: Long): DataFrame = {
+      comm: DataFrame, out: String): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val dc = deg.join(nodeBroadcast(comm, nNodes), "node")
+    val dc = deg.join(boundedBroadcast(comm), "node")
       .groupBy("comm").agg(sum(col("d")).as("d_c"))
-    val ec = withEndpoints(und, comm, "comm", "cs", "cd", nNodes)
+    val ec = withEndpoints(und, comm, "comm", "cs", "cd")
       .filter(col("cs") === col("cd"))
       .groupBy(col("cs").as("comm")).agg(count(lit(1)).as("e_c"))
     dc.join(ec, Seq("comm"), "left")
@@ -1361,18 +1299,15 @@ object Graph {
       brand: DataFrame, sweeps: Int): DataFrame = {
     val deg = degrees(und).graftCheckpoint(true)
     val m = und.agg(count(lit(1)).as("m")).graftCheckpoint(true)
-    // one cheap job over the checkpointed degree frame sizes every
-    // broadcast decision across the sweeps (node sets never grow)
-    val nNodes = deg.count()
     var comm = Checkpoints.fresh(
-      deg.join(nodeBroadcast(brand, nNodes), "node").select(col("node"), col("comm")),
+      deg.join(boundedBroadcast(brand), "node").select(col("node"), col("comm")),
       "node", "comm")
     // r18: each sweep's Q-before comes FREE from the core's checkpointed
     // context (one edge pass yields moves AND the exact Q of the input
     // partition), and sweep k's Q-after is sweep k+1's Q-before — so
     // `sweeps` core passes + ONE final modularityQ replace the r17
     // shape's `sweeps` move passes + `sweeps`+1 standalone Q passes.
-    var (mvRaw, qFrame) = louvainSweepCore(und, deg, m, comm, "q", nNodes)
+    var (mvRaw, qFrame) = louvainSweepCore(und, deg, m, comm, "q")
     var mv = Checkpoints.fresh(mvRaw, "node", "old_comm", "new_comm")
     var qCur = qFrame.head().getDouble(0)
     val rows = Seq.newBuilder[(Int, Long, Double, Double)]
@@ -1384,10 +1319,10 @@ object Graph {
         "node", "comm")
       val qNext =
         if (k < sweeps) {
-          val (nextMv, nextQ) = louvainSweepCore(und, deg, m, comm, "q", nNodes)
+          val (nextMv, nextQ) = louvainSweepCore(und, deg, m, comm, "q")
           mv = Checkpoints.fresh(nextMv, "node", "old_comm", "new_comm")
           nextQ.head().getDouble(0)
-        } else modularityQ(und, deg, m, comm, nNodes)
+        } else modularityQ(und, deg, m, comm)
       rows += ((k, nMoves, qCur, qNext))
       qCur = qNext
     }
@@ -1503,10 +1438,6 @@ object Graph {
       .graftCheckpoint(true)
     var lbl = nb.select(col("node")).distinct()
       .select(col("node"), col("node").as("label")).graftCheckpoint(true)
-    // one cheap job over the checkpointed node frame (the q63 idiom):
-    // sizes every per-round broadcast decision — label frames stay
-    // node-sized across rounds, so the initial count is a sound bound
-    val nNodes = lbl.count()
     for (_ <- 1 to LpaRounds) {
       // r18: the per-node argmax (count DESC, label ASC) is a MAX over
       // the lexicographic struct (cnt, −label) — one more map-side-
@@ -1518,12 +1449,11 @@ object Graph {
       // non-negative part keys, so max(cnt, −label) picks exactly the
       // window's rn = 1 row.
       // r19: the node-sized label state broadcasts (size-conditionally,
-      // [[nodeBroadcast]]) so the checkpointed edge-scale `nb` frame is
+      // [[boundedBroadcast]]) so the checkpointed edge-scale `nb` frame is
       // never re-shuffled per round (guide §3.1) — above the limit the
       // same plan degrades to a shuffle join on nbr and the edges still
       // move only once per round.
-      lbl = nb.join(
-          nodeBroadcast(lbl.select(col("node").as("nbr"), col("label")), nNodes), "nbr")
+      lbl = nb.join(boundedBroadcast(lbl.select(col("node").as("nbr"), col("label"))), "nbr")
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("node"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))

@@ -37,6 +37,22 @@ import graft.operators.Checkpoints.GraftCheckpointOps
   */
 object Temporal {
 
+  /** The daily revenue series the time-series queries read, from orders:
+    * (day: DATE, rev_c: BIGINT), or (grp, day, rev_c) per order status
+    * when `byStatus`. Each order's price is snapped to integer cents
+    * (`floor(price · 100 + 0.5)`) and a day's cents are summed exactly,
+    * as in every oracle's `daily` CTE.
+    */
+  private def dailyRevenue(spark: SparkSession, dir: String,
+      byStatus: Boolean = false): DataFrame = {
+    val keys = if (byStatus) Seq(col("o_orderstatus").as("grp")) else Nil
+    Tables.orders(spark, dir)
+      .select(keys ++ Seq(to_date(col("o_orderdate")).as("day"),
+        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc")): _*)
+      .groupBy((if (byStatus) Seq(col("grp")) else Nil) :+ col("day"): _*)
+      .agg(sum(col("pc")).as("rev_c"))
+  }
+
   // ---------------------------------------------------------------------
   // q104: Kaplan-Meier survival estimate of click→purchase latency.
   // Cohort: each user's FIRST click opens an observation; the first
@@ -186,14 +202,8 @@ object Temporal {
   // fixed-shape double expressions of exact integers; residual finals
   // are one expression, rounded once.
   // ---------------------------------------------------------------------
-  def q105SeasonalDecompose(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    seasonalDecomposeFrom(daily)
-  }
+  def q105SeasonalDecompose(spark: SparkSession, dir: String): DataFrame =
+    seasonalDecomposeFrom(dailyRevenue(spark, dir))
 
   /** Decomposition over any (day: DATE, rev_c: BIGINT) daily series —
     * spec entry point.
@@ -452,14 +462,8 @@ object Temporal {
   // ---------------------------------------------------------------------
   private[operators] val AcfMaxLag = 7
 
-  def q120Acf(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    acfFrom(daily)
-  }
+  def q120Acf(spark: SparkSession, dir: String): DataFrame =
+    acfFrom(dailyRevenue(spark, dir))
 
   /** The nano-snapped autocorrelations (lag, r9, n) shared by q120 and
     * q140's Durbin-Levinson recursion.
@@ -560,14 +564,8 @@ object Temporal {
   // 2e6·rev − med2·i grid in DECIMAL(38,0); finals are one double
   // division each, rounded once.
   // ---------------------------------------------------------------------
-  def q121TheilSen(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    theilSenFrom(daily)
-  }
+  def q121TheilSen(spark: SparkSession, dir: String): DataFrame =
+    theilSenFrom(dailyRevenue(spark, dir))
 
   /** Theil-Sen fit over any (day: DATE, rev_c: BIGINT) daily series —
     * spec entry point.
@@ -677,14 +675,8 @@ object Temporal {
   // (revenue cents compare exactly; tie groups count exactly); Z is
   // ONE double expression — (S∓1)/sqrt(var18/18) — rounded once.
   // ---------------------------------------------------------------------
-  def q122MannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    mannKendallFrom(daily)
-  }
+  def q122MannKendall(spark: SparkSession, dir: String): DataFrame =
+    mannKendallFrom(dailyRevenue(spark, dir))
 
   /** Mann-Kendall statistics over any (day: DATE, rev_c: BIGINT) daily
     * series — spec entry point.
@@ -763,14 +755,8 @@ object Temporal {
   // are one double division each, rounded once (the degenerate
   // peak-at-last-day case defines mean_after as 0 in both engines).
   // ---------------------------------------------------------------------
-  def q123Cusum(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    cusumFrom(daily)
-  }
+  def q123Cusum(spark: SparkSession, dir: String): DataFrame =
+    cusumFrom(dailyRevenue(spark, dir))
 
   /** CUSUM change-point over any (day: DATE, rev_c: BIGINT) daily series
     * — spec entry point.
@@ -848,14 +834,8 @@ object Temporal {
   // those integers — written with the same association order in both
   // engines — rounded once.
   // ---------------------------------------------------------------------
-  def q124RunsTest(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    runsTestFrom(daily)
-  }
+  def q124RunsTest(spark: SparkSession, dir: String): DataFrame =
+    runsTestFrom(dailyRevenue(spark, dir))
 
   /** Runs-vs-median test over any (day: DATE, rev_c: BIGINT) daily
     * series — spec entry point.
@@ -958,14 +938,8 @@ object Temporal {
   // ---------------------------------------------------------------------
   private[operators] val PeriodogramPeriods = Seq(7L, 30L, 91L, 365L)
 
-  def q125Periodogram(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    periodogramFrom(daily)
-  }
+  def q125Periodogram(spark: SparkSession, dir: String): DataFrame =
+    periodogramFrom(dailyRevenue(spark, dir))
 
   /** Candidate-period spectral powers over any (day: DATE, rev_c:
     * BIGINT) daily series — spec entry point.
@@ -1058,14 +1032,8 @@ object Temporal {
   // ---------------------------------------------------------------------
   private[operators] val RefDays = 365L
 
-  def q126PageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    pageHinkleySummaryFrom(pageHinkleyPathFrom(daily, RefDays))
-  }
+  def q126PageHinkley(spark: SparkSession, dir: String): DataFrame =
+    pageHinkleySummaryFrom(pageHinkleyPathFrom(dailyRevenue(spark, dir), RefDays))
 
   /** Den-scaled PH path over any (day: DATE, rev_c: BIGINT) daily
     * series: monitor rows (day, seq, ph_up, ph_dn) on the refN-scaled
@@ -1313,15 +1281,8 @@ object Temporal {
   // (guarantees V > 0); a zero-variance residual vector nulls out via
   // the den > 0 guard (q56's discipline).
   // ---------------------------------------------------------------------
-  def q133DurbinWatson(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    durbinWatsonFrom(daily)
-  }
+  def q133DurbinWatson(spark: SparkSession, dir: String): DataFrame =
+    durbinWatsonFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** Exact per-group OLS residual pass shared by q133/q136: (grp, i, n,
     * r3) with r3 the milli-cent-snapped residual of the linear day-index
@@ -1441,15 +1402,8 @@ object Temporal {
   // Groups whose residuals are all zero (σ̂ = 0) drop, as do zero-
   // variance auxiliary vectors (vu ≤ 0) — the q56 degenerate guard.
   // ---------------------------------------------------------------------
-  def q136BreuschPagan(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    breuschPaganFrom(daily)
-  }
+  def q136BreuschPagan(spark: SparkSession, dir: String): DataFrame =
+    breuschPaganFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** RMS-standardized residuals shared by q136/q137: (grp, i, n, zu6)
     * with zu6 = r3/√(Σr3²/n) micro-snapped; zero-variance groups drop.
@@ -1573,15 +1527,8 @@ object Temporal {
   // pow(x, 1.5), which is deliberately avoided. S, K, JB are each one
   // fixed-shape double expression over the exact sums, rounded once.
   // ---------------------------------------------------------------------
-  def q137JarqueBera(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    jarqueBeraFrom(daily)
-  }
+  def q137JarqueBera(spark: SparkSession, dir: String): DataFrame =
+    jarqueBeraFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** JB over any (grp, day: DATE, rev_c: BIGINT) daily series — spec
     * entry point.
@@ -1687,15 +1634,8 @@ object Temporal {
   // are each one fixed-shape double expression rounded once, and
   // degenerate variance vectors (vx or vy ≤ 0) drop per the q56 guard.
   // ---------------------------------------------------------------------
-  def q138ArchLm(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    archLmFrom(daily)
-  }
+  def q138ArchLm(spark: SparkSession, dir: String): DataFrame =
+    archLmFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** ARCH(1) LM over any (grp, day: DATE, rev_c: BIGINT) daily series —
     * spec entry point.
@@ -1813,15 +1753,8 @@ object Temporal {
   // ---------------------------------------------------------------------
   private val HurstSizes = Seq(8L, 16L, 32L, 64L)
 
-  def q139Hurst(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    hurstFrom(daily)
-  }
+  def q139Hurst(spark: SparkSession, dir: String): DataFrame =
+    hurstFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** R/S Hurst fit over any (grp, day: DATE, rev_c: BIGINT) daily
     * series — spec entry point.
@@ -1956,14 +1889,8 @@ object Temporal {
   // Σ-subtraction, identical parenthesization), so every φ is
   // bit-identical cross-engine; rounded once at the edge.
   // ---------------------------------------------------------------------
-  def q140Pacf(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    pacfFrom(daily)
-  }
+  def q140Pacf(spark: SparkSession, dir: String): DataFrame =
+    pacfFrom(dailyRevenue(spark, dir))
 
   /** PACF over any (day: DATE, rev_c: BIGINT) daily series — spec entry
     * point.
@@ -2176,15 +2103,8 @@ object Temporal {
   // guarded NULL τ on a perfect fit (vy·vx = nm²) — the t86/t88
   // convention.
   // ---------------------------------------------------------------------
-  def q144DickeyFuller(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    dickeyFullerFrom(daily)
-  }
+  def q144DickeyFuller(spark: SparkSession, dir: String): DataFrame =
+    dickeyFullerFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** DF τ over any (grp, day: DATE, rev_c: BIGINT) daily series — spec
     * entry point.
@@ -2436,15 +2356,8 @@ object Temporal {
   // is EXACT integer arithmetic up to ONE double division, rounded
   // once (guarded NULL on a constant series, where the LRV is 0).
   // ---------------------------------------------------------------------
-  def q146Kpss(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .select(col("o_orderstatus").as("grp"),
-        to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("grp"), col("day"))
-      .agg(sum(col("pc")).as("rev_c"))
-    kpssFrom(daily)
-  }
+  def q146Kpss(spark: SparkSession, dir: String): DataFrame =
+    kpssFrom(dailyRevenue(spark, dir, byStatus = true))
 
   /** KPSS η over any (grp, day: DATE, rev_c: BIGINT) daily series —
     * spec entry point.

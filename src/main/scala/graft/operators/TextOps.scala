@@ -698,10 +698,14 @@ object TextOps {
       .select(explode(sequence(lit(0), lit(CmsRows - 1))).as("r"), col("word"))
       .groupBy(col("r"), cell(col("r"), col("word")).as("cell"))
       .agg(count(lit(1)).as("cnt"))
+    // null-safe on cell, which is never null: an equi-join on it infers
+    // isnotnull(cell), which Catalyst pushes below the sketch aggregate,
+    // hashing every (row, token) pair twice
     top
       .crossJoin(spark.range(CmsRows).select(col("id").cast("int").as("r")))
       .withColumn("cell", cell(col("r"), col("word")))
-      .join(sketch, Seq("r", "cell"))
+      .join(sketch.select(col("r").as("sr"), col("cell").as("sc"), col("cnt")),
+        col("r") === col("sr") && col("cell") <=> col("sc"))
       .groupBy(col("word"), col("n"))
       .agg(min(col("cnt")).as("cms_est"))
       .select(col("word"), col("n"), col("cms_est"),
@@ -3683,10 +3687,11 @@ object TextOps {
   // Scale shape: the bigram fan-out is a pure projection (slice+zip —
   // no window, no self-join); the graph collapses to the DISTINCT
   // bigram vocabulary (sublinear in the corpus, the t89 axis); each
-  // round broadcasts the node-sized (rank ⋈ weighted-degree) state
-  // onto the edge list while it fits Graph.nodeBroadcast's limit —
-  // edges never shuffle to learn ranks (q63's idiom), and per-edge
-  // work is one integer multiply-divide.
+  // round broadcasts the node-sized (node, rank, weighted degree)
+  // state onto the edge list while it fits Graph.boundedBroadcast's
+  // limit — edges never shuffle to learn ranks (q63's idiom), and
+  // per-edge work is one integer multiply-divide. Rounds 1–4 checkpoint
+  // their state, so a round's plan never grows with the round number.
   //
   // Determinism: ranks live on an integer 1e10 grid with floor
   // division (the q63 discipline — 1e10 keeps r·85·w inside int64 at
@@ -3717,30 +3722,31 @@ object TextOps {
     val e = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
       .graftCheckpoint(true)
-    val wdeg = e.groupBy(col("src")).agg(sum(col("w")).as("wd"))
-    val nodes = wdeg.select(col("src").as("node")).graftCheckpoint(true)
+    val nodes = e.groupBy(col("src").as("node")).agg(sum(col("w")).as("wd"))
+      .graftCheckpoint(true)
     // one cheap job over the checkpointed node frame (q63's pattern):
-    // the measured node count is the rank normalizer (a plan literal)
-    // and sizes every per-round state broadcast
+    // the node count is the rank normalizer (a plan literal)
     val nNodes = nodes.count()
     // an empty graph has no rows to divide; max(·, 1) keeps the literals
     // defined without a branch
     val n = math.max(nNodes, 1L)
     val base = (TrScale * 15) / (100 * n)
-    var r = nodes.select(col("node"), lit(TrScale / n).as("r"))
-    for (_ <- 1 to TrIters) {
+    var st = nodes.select(col("node"), lit(TrScale / n).as("r"), col("wd"))
+    for (i <- 1 to TrIters) {
       // above the broadcast limit this degrades to a shuffle join on
       // src; the edge set still moves only once per round
-      val state = r.join(wdeg.withColumnRenamed("src", "node"), "node")
       val contrib = e
-        .join(Graph.nodeBroadcast(state, nNodes), col("src") === col("node"))
+        .join(Graph.boundedBroadcast(st), col("src") === col("node"))
         .select(col("dst"), expr("(r * 85 * w) div (100 * wd)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      r = nodes
+      st = nodes
         .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"), (lit(base) + coalesce(col("inflow"), lit(0L))).as("r"))
+        .select(col("node"), (lit(base) + coalesce(col("inflow"), lit(0L))).as("r"),
+          col("wd"))
+      // the last round stays lazy: the ranking reads it once
+      if (i < TrIters) st = st.graftCheckpoint(true)
     }
-    r.select(col("node").as("word"), col("r"))
+    st.select(col("node").as("word"), col("r"))
       .orderBy(col("r").desc, col("word"))
   }
 

@@ -28,7 +28,7 @@ class GraphPhashSpec extends AnyFunSuite {
   }
 
   test("q66 degree-ordered orientation: exact edge bijection and √(2m) out-degree cap") {
-    val (und, or, _) = Graph.orientedCoPurchase(spark, dir)
+    val (und, or) = Graph.orientedCoPurchase(spark, dir)
     val m = und.count()
     // orientation is a bijection on edges — nothing dropped or duplicated
     assert(or.count() == m)
@@ -108,7 +108,7 @@ class GraphPhashSpec extends AnyFunSuite {
   }
 
   test("q134 matches a naive ladder recompute on sf0.001") {
-    val (und, _, _) = Graph.orientedCoPurchase(spark, dir)
+    val (und, _) = Graph.orientedCoPurchase(spark, dir)
     val edges = und.collect().map(r => (r.getLong(0), r.getLong(1)))
     val degm = (edges.map(_._1) ++ edges.map(_._2)).groupBy(identity)
       .map { case (k, v) => k -> v.length.toLong }
@@ -155,7 +155,7 @@ class GraphPhashSpec extends AnyFunSuite {
   }
 
   test("q135 matches a naive recompute on sf0.001") {
-    val (und, _, _) = Graph.orientedCoPurchase(spark, dir)
+    val (und, _) = Graph.orientedCoPurchase(spark, dir)
     val edges = und.collect().map(r => (r.getLong(0), r.getLong(1)))
     val brand = Tables.part(spark, dir).select("p_partkey", "p_brand").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap

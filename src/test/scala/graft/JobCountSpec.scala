@@ -18,8 +18,10 @@ import graft.operators.Dedup
   *  - a PageRank round is one shuffle — a broadcast job, a map stage and
   *    a result stage, at most 3 jobs;
   *  - connected components below `spark.graft.graph.broadcastLimit`
-  *    finish on the driver: the pair checkpoint, one count and one
-  *    collect, and no contraction round.
+  *    finish on the driver: the pair checkpoint and one collect, and no
+  *    contraction round;
+  *  - broadcast decisions read the bytes a checkpoint holds and run no
+  *    action of their own.
   *
   * Jobs are grouped by the SQL execution (one Dataset action or eager
   * checkpoint) that started them.
@@ -61,12 +63,23 @@ class JobCountSpec extends AnyFunSuite {
     import spark.implicits._
     val pairs = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (10L, 11L)).toDF("x", "y")
     val local = jobsPerExecution(Dedup.connectedComponents(pairs, "x", "y").collect())
-    // the pair checkpoint, the count, the collect — the returned frame is
-    // a local relation, so reading it adds no further action
-    assert(local.size <= 3, s"jobs per execution below the limit: $local")
+    // the pair checkpoint and the collect — the returned frame is a local
+    // relation, so reading it adds no further action
+    assert(local.size <= 2, s"jobs per execution below the limit: $local")
     spark.conf.set("spark.graft.graph.broadcastLimit", "1")
     val rounds = try jobsPerExecution(Dedup.connectedComponents(pairs, "x", "y").collect())
       finally spark.conf.unset("spark.graft.graph.broadcastLimit")
     assert(rounds.size > 3, s"the distributed path must take contraction rounds: $rounds")
+  }
+
+  test("q67, q115 and q116 run one SQL execution fewer than with row-count broadcast sizing") {
+    // executions with the row-count guard: q67 counted its nodes, q115
+    // read two countDistincts, q116 checkpointed its threshold frame and
+    // counted its nodes
+    val rowCounted = Map("q67_khop_reach" -> 11, "q115_hits" -> 7, "q116_kcore" -> 12)
+    for ((q, n) <- rowCounted) {
+      val perExec = jobsPerExecution(SparkEntry.queries(q)(spark, dir))
+      assert(perExec.size == n - 1, s"$q executions: $perExec")
+    }
   }
 }

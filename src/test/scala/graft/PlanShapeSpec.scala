@@ -504,4 +504,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.collect { case w: WindowExec => w }.isEmpty,
       s"t67 must carry no window at all after the top-V rewrite:\n$plan")
   }
+
+  test("c77/t60 hash each row once: no Filter evaluates md5_bits60/fast_md5") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    // an equi-join on a hashed column infers isnotnull(column), which
+    // Catalyst pushes below the projection that computes the hash: the
+    // Filter then hashes every row once more (both queries join
+    // null-safely for that reason)
+    for (q <- Seq("c77_source_datasheet", "t60_heavy_hitters")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val hashing = plan.collect { case f: Filter => f.condition.sql }
+        .filter(c => c.contains("md5_bits60") || c.contains("fast_md5"))
+      assert(hashing.isEmpty, s"$q: a Filter re-evaluates a hash:\n${hashing.mkString("\n")}")
+    }
+  }
 }
