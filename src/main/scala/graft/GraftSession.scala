@@ -36,6 +36,14 @@ import graft.streaming.LocalCheckpointFiles
   * compressed bytes read 2.6–7.4× under the rows they hold (BroadcastGuardSpec
   * shapes), which is no upper bound. The files grow by the same factor;
   * local checkpoints, the default, are not affected.
+  *
+  * RocksDB state stores commit through changelog checkpointing (Spark
+  * 4.1 defaults it off): a commit writes the keys the epoch changed to a
+  * changelog file, where without it every commit flushes RocksDB,
+  * hard-links a local snapshot and uploads its SST files inside the
+  * task. A snapshot is still taken every `minDeltasForSnapshot` commits
+  * (Spark's default 10) and uploaded by the maintenance thread; a restart
+  * replays the changelogs written after it.
   */
 object GraftSession {
   /** Local threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
@@ -69,6 +77,9 @@ object GraftSession {
       // reliable checkpoint files hold serialized rows uncompressed, so
       // their bytes bound the rows from above (Checkpoints.heldBytes)
       .config("spark.checkpoint.compress", "false")
+      // a RocksDB state commit writes the epoch's changed keys to a
+      // changelog file; snapshots move to the maintenance thread
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.functions.FlatJsonTuple
 
 /** Stream sources. The reference ingests JSON `{readTag_id, readValue}`
   * records from a Kafka 0.8 receiver (`KafkaUtils.createStream`,
@@ -45,16 +48,24 @@ object Sources {
   /** P1 (`AVG:80-81`): Kafka value bytes → (readTag_id, value: double).
     * The reference's record is `{readTag_id, readValue}` with `readValue` a
     * JSON *string* carrying a number (`AVG:202-214`: `getString`, then
-    * `Double.parseDouble`); here the two steps are `json_tuple` and
+    * `Double.parseDouble`); here the two steps are [[readingFields]] and
     * `try_cast`.
     *
-    * Each record is parsed once. `json_tuple` is a generator, and a
-    * `Generate` is a barrier that filter pushdown cannot copy the parser
-    * through. A parser in a projection (`from_json`, `get_json_object`)
-    * is not: Catalyst pushes the not-null filter below the projection and
-    * copies the parser into the predicate (three `from_json` parses per
-    * record, two `get_json_object`). In the benchmark's `stream_jobs`
-    * workload `from_json` alone took half of the executor CPU samples.
+    * Each record is parsed once, by a generator. A `Generate` is a
+    * barrier that filter pushdown cannot copy the parser through. A parser
+    * in a projection (`from_json`, `get_json_object`) is not: Catalyst
+    * pushes the not-null filter below the projection and copies the parser
+    * into the predicate (three `from_json` parses per record, two
+    * `get_json_object`). In the benchmark's `stream_jobs` workload
+    * `from_json` alone took half of the executor CPU samples.
+    *
+    * The generator is [[graft.functions.FlatJsonTuple]], which reads a
+    * record in one scan of its bytes, without a JSON parser, when the
+    * record has the flat wire shape: one object of `"key":"value"` pairs
+    * (JSON whitespace around the tokens), every key and value a string of
+    * printable ASCII without `\` or `"`, no requested field twice, at
+    * most 32 KiB. Every other record goes to Spark's `json_tuple` and
+    * reads as it did through `json_tuple` alone (FlatJsonTupleSpec).
     *
     * Malformed records produce nulls instead of the reference's
     * task-killing JSONException — filtered, not fatal. That includes a
@@ -67,8 +78,7 @@ object Sources {
     * string is accepted, as `get_json_object` accepts it (ReadingParseSpec).
     */
   def parseReadings(raw: DataFrame): DataFrame =
-    raw.select(json_tuple(col("value").cast(StringType), "readTag_id", "readValue")
-        .as(Seq("readTag_id", "readValue")))
+    raw.select(readingFields("readTag_id", "readValue").as(Seq("readTag_id", "readValue")))
       .select(col("readTag_id"), col("readValue").try_cast(DoubleType).as("value"))
       .filter(col("readTag_id").isNotNull && col("value").isNotNull)
 
@@ -78,8 +88,15 @@ object Sources {
     * takes.
     */
   def extractTagIds(raw: DataFrame): DataFrame =
-    raw.select(json_tuple(col("value").cast(StringType), "readTag_id").as("line"))
+    raw.select(readingFields("readTag_id").as("line"))
       .filter(col("line").isNotNull)
+
+  /** `json_tuple(value, fields…)` over the `value` column (string or
+    * Kafka's binary), read through [[graft.functions.FlatJsonTuple]].
+    */
+  private def readingFields(fields: String*): Column =
+    ColumnBridge.column(FlatJsonTuple(
+      (col("value").cast(StringType) +: fields.map(lit)).map(ColumnBridge.expression)))
 
   /** Raw on-disk events schema, probed from the parquet footers (the file
     * stream source needs an explicit schema). `ts` has been int64 nanos

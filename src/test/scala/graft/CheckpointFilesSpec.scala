@@ -138,11 +138,14 @@ class CheckpointFilesSpec extends AnyFunSuite {
         s"$k.summer: stream=${s.summer} batch=$want")
     }
 
-    // fault detection is kept: .crc beside offset, commit and state files
-    def crcsUnder(d: File): Seq[String] =
+    def filesUnder(d: File): Seq[String] =
       Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) crcsUnder(f) else Seq(f.getName).filter(_.endsWith(".crc")))
+        if (f.isDirectory) filesUnder(f) else Seq(f.getName))
+    // fault detection is kept: .crc beside offset, commit and state files
     for (d <- Seq("offsets", "commits", "state"))
-      assert(crcsUnder(new File(ckpt, d)).nonEmpty, s"no .crc under $d/")
+      assert(filesUnder(new File(ckpt, d)).exists(_.endsWith(".crc")), s"no .crc under $d/")
+    // state commits wrote changelogs, and the restart above resumed from them
+    assert(filesUnder(new File(ckpt, "state")).exists(_.endsWith(".changelog")),
+      filesUnder(new File(ckpt, "state")).sorted.mkString(", "))
   }
 }

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.FlatJsonTuple
 import graft.streaming.Sources
 
 /** The record parsers of both reference jobs: `Sources.parseReadings`
   * (P1) and `Sources.extractTagIds` (P2) parse each record once, through
-  * one `json_tuple` generator, and return the rows of the earlier
+  * one `FlatJsonTuple` generator, and return the rows of the earlier
   * `from_json` / `get_json_object` forms on adversarial input, apart from
   * the pinned duplicate-key and control-character cases.
   */
@@ -34,38 +35,7 @@ class ReadingParseSpec extends AnyFunSuite {
     raw.select(get_json_object(col("value").cast(StringType), "$.readTag_id").as("line"))
       .filter(col("line").isNotNull)
 
-  // every record is parsed on its own (one record per DataFrame) so a
-  // difference names the record that caused it
-  private val sameAsBefore = Seq(
-    """{"readTag_id":"b01 t00001","readValue":"20.125"}""",
-    """{"readTag_id":"b01 t00002","readV""", // truncated
-    """{"readValue":"3.5"}""", // no tag
-    """{"readTag_id":"b01 t00003","readValue":"n/a"}""",
-    """{"readTag_id":"u1","readValue":12.5}""", // unquoted numbers
-    """{"readTag_id":"u2","readValue":1.50}""",
-    """{"readTag_id":"u3","readValue":1e3}""",
-    """{"readTag_id":"u4","readValue":true}""",
-    """{"readTag_id":"n1","readValue":null}""", // JSON null
-    """{"readTag_id":null,"readValue":"1"}""",
-    """{"readTag_id":{"x":"y"},"readValue":"1"}""", // nested
-    """{"readTag_id":"nest","readValue":{"v":"1"}}""",
-    """{"readTag_id":"arr","readValue":["1"]}""",
-    """{"readTag_id":"b\"q\" té\\n","readValue":"2"}""", // escaped and unicode
-    "{\"readTag_id\":\"bâ t☃\",\"readValue\":\"2\"}",
-    """{"readTag_id":42,"readValue":"3"}""", // numeric tag
-    """{"readTag_id":4.20,"readValue":"3"}""",
-    """[{"readTag_id":"top","readValue":"1"}]""", // top-level array / scalars
-    """"scalar"""",
-    "12",
-    "",
-    """{"readTag_id":"tg","readValue":"1"} trailing""",
-    """{"readTag_id":"c1","readValue":"1"}{"readTag_id":"c2","readValue":"2"}""",
-    """{'readTag_id':'sq','readValue':'1'}""", // single quotes
-    """{"readTag_id":"","readValue":"1"}""", // empty tag
-    """{"readTag_id":"d2","readValue":"1","readValue":"2"}""",
-    """  {"readTag_id":"ws","readValue":" 7 "}  """,
-    """{"readTag_id":"nan","readValue":"NaN"}""",
-    "not json at all")
+  import ReadingParseSpec.sameAsBefore
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
@@ -130,14 +100,52 @@ class ReadingParseSpec extends AnyFunSuite {
 
   for ((name, parse) <- Seq[(String, DataFrame => DataFrame)](
       "parseReadings" -> Sources.parseReadings, "extractTagIds" -> Sources.extractTagIds))
+    // FlatJsonTuple is json_tuple with a byte-scan fast path; Spark's
+    // JsonTuple is its private fallback, never a plan expression
     test(s"$name runs one json_tuple generator per record and no other JSON parser") {
       val plan = streamedPlan(parse, s"parse_plan_$name")
       val generators = plan.collect { case g: GenerateExec => g.generator }
-      assert(generators.count(_.isInstanceOf[JsonTuple]) == 1, plan.treeString)
+      assert(generators.size == 1 && generators.head.isInstanceOf[FlatJsonTuple], plan.treeString)
       val parsers = exprs(plan).filter {
-        case _: JsonToStructs | _: GetJsonObject => true
+        case _: JsonTuple | _: JsonToStructs | _: GetJsonObject => true
         case _ => false
       }
       assert(parsers.isEmpty, plan.treeString)
     }
+}
+
+object ReadingParseSpec {
+  // adversarial wire records, FlatJsonTupleSpec's first set too; each is
+  // parsed on its own (one record per DataFrame) so a difference names
+  // the record that caused it
+  val sameAsBefore = Seq(
+    """{"readTag_id":"b01 t00001","readValue":"20.125"}""",
+    """{"readTag_id":"b01 t00002","readV""", // truncated
+    """{"readValue":"3.5"}""", // no tag
+    """{"readTag_id":"b01 t00003","readValue":"n/a"}""",
+    """{"readTag_id":"u1","readValue":12.5}""", // unquoted numbers
+    """{"readTag_id":"u2","readValue":1.50}""",
+    """{"readTag_id":"u3","readValue":1e3}""",
+    """{"readTag_id":"u4","readValue":true}""",
+    """{"readTag_id":"n1","readValue":null}""", // JSON null
+    """{"readTag_id":null,"readValue":"1"}""",
+    """{"readTag_id":{"x":"y"},"readValue":"1"}""", // nested
+    """{"readTag_id":"nest","readValue":{"v":"1"}}""",
+    """{"readTag_id":"arr","readValue":["1"]}""",
+    """{"readTag_id":"b\"q\" té\\n","readValue":"2"}""", // escaped and unicode
+    "{\"readTag_id\":\"bâ t☃\",\"readValue\":\"2\"}",
+    """{"readTag_id":42,"readValue":"3"}""", // numeric tag
+    """{"readTag_id":4.20,"readValue":"3"}""",
+    """[{"readTag_id":"top","readValue":"1"}]""", // top-level array / scalars
+    """"scalar"""",
+    "12",
+    "",
+    """{"readTag_id":"tg","readValue":"1"} trailing""",
+    """{"readTag_id":"c1","readValue":"1"}{"readTag_id":"c2","readValue":"2"}""",
+    """{'readTag_id':'sq','readValue':'1'}""", // single quotes
+    """{"readTag_id":"","readValue":"1"}""", // empty tag
+    """{"readTag_id":"d2","readValue":"1","readValue":"2"}""",
+    """  {"readTag_id":"ws","readValue":" 7 "}  """,
+    """{"readTag_id":"nan","readValue":"NaN"}""",
+    "not json at all")
 }
