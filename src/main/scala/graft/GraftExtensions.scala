@@ -8,8 +8,8 @@ import graft.functions.Vectors
 
 /** Session extension point — `--conf spark.sql.extensions=graft.GraftExtensions`
   * injects the engine's native functions into every session (SQL and
-  * Column API). Planner rules/strategies would be injected here too if an
-  * operator ever needs one (none so far — SURVEY.md §7.4).
+  * Column API). The one optimizer rule, [[SmallFinalSort]], is installed
+  * by `GraftSession.builder`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

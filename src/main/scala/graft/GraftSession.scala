@@ -44,6 +44,16 @@ import graft.streaming.LocalCheckpointFiles
   * task. A snapshot is still taken every `minDeltasForSnapshot` commits
   * (Spark's default 10) and uploaded by the maintenance thread; a restart
   * replays the changelogs written after it.
+  *
+  * Parquet INT64 TIMESTAMP(NANOS) columns read as long
+  * (`spark.sql.legacy.parquet.nanosAsLong`) in every session, so the
+  * schema of a table does not depend on which loader ran first
+  * ([[Tables.events]] converts them).
+  *
+  * [[SmallFinalSort]] is installed as an AQE runtime optimizer rule: a
+  * final `ORDER BY` over a small materialized input sorts in the stage that
+  * reads it, where AQE would run it in one task anyway, instead of
+  * sampling it for a range exchange first.
   */
 object GraftSession {
   /** Local threads and shuffle partitions: `SPARK_GRAFT_CPUS` when set,
@@ -80,6 +90,8 @@ object GraftSession {
       // a RocksDB state commit writes the epoch's changed keys to a
       // changelog file; snapshots move to the maintenance thread
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .withExtensions(_.injectRuntimeOptimizerRule(_ => SmallFinalSort))
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided TPC-H-ish tables (`TESTDATA.md`).
   *
@@ -17,8 +21,42 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+  /** A table's path, and the name, length and modification time of each
+    * file under it. */
+  private type FilesKey = (String, Seq[(String, Long, Long)])
+
+  /** Inferred schemas per session, keyed by the table's files. */
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[FilesKey, StructType]]())
+
+  /** A fresh relation over `<sfDir>/<table>.parquet`, with fresh attribute
+    * ids, so two loads of one table self-join unambiguously.
+    *
+    * `spark.read.parquet` infers the schema from the parquet footers, and
+    * that is a Spark job per read: 42 of the 35-query benchmark set's build
+    * jobs read 9 distinct tables. The schema inferred by the first load is
+    * kept for the session and handed to every later load as a
+    * user-specified schema, which reads no footer. Its key is the path
+    * plus the name, length and modification time of each file under it,
+    * from the driver's file listing, so a table rewritten in place is
+    * inferred again.
+    */
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = new Path(s"$sfDir/$table.parquet")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val status = fs.getFileStatus(path)
+    val files = if (status.isDirectory) fs.listStatus(path).toSeq else Seq(status)
+    val key: FilesKey =
+      (path.toString, files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)))
+    val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[FilesKey, StructType]())
+    Option(memo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path.toString)
+      case None =>
+        val df = spark.read.parquet(path.toString)
+        memo.put(key, df.schema)
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -37,9 +75,11 @@ object Tables {
     *    land 1 µs off DuckDB's exact ns→µs truncation);
     *  - micros (arrives as TIMESTAMP_NTZ) → cast to TimestampType, a
     *    wall-clock no-op under the engine's fixed UTC session zone.
+    * The nanos generation resolves to long only under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession.builder`
+    * sets for the whole session.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

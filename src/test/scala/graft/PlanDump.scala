@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Writes the formatted physical plans of each query to `<outDir>/<query>.txt`:
@@ -15,6 +18,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * one. Expression, plan and RDD ids are masked, so a `diff -r` of two
   * dumps shows plan changes (and the few orderings Catalyst does not fix,
   * such as an `Expand`'s projections).
+  *
+  * `<outDir>/jobs.tsv` counts, per query, the SQL executions, jobs and
+  * stages its builder and its run started, read after the listener bus
+  * is drained: the battery's job count, one line per query.
   *
   * {{{
   * sbt "Test/runMain graft.PlanDump /path/to/sf0.01 /tmp/plans [query ...]"
@@ -47,11 +54,22 @@ object PlanDump {
         runs.synchronized(runs += s"-- execution: $funcName\n${formatted(qe)}")
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     })
+    val executions, jobs, stages = new AtomicInteger()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
+    })
+    val counts = ArrayBuffer("query\texecutions\tjobs\tstages")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
     for ((name, fn) <- queries) {
       org.apache.spark.graft.ListenerBusDrain(sc)
       runs.synchronized(runs.clear())
+      Seq(executions, jobs, stages).foreach(_.set(0))
       val df = fn(spark, sfDir)
       val planned = formatted(df.queryExecution)
       // run it too: AQE may re-plan a join once its inputs are measured
@@ -59,8 +77,10 @@ object PlanDump {
       org.apache.spark.graft.ListenerBusDrain(sc)
       val text = s"${runs.synchronized(runs.mkString("\n"))}\n-- returned frame, planned\n$planned"
       Files.writeString(Paths.get(outDir, s"$name.txt"), text)
+      counts += s"$name\t${executions.get}\t${jobs.get}\t${stages.get}"
       ModelCache.releaseTransient(spark)
     }
+    Files.writeString(Paths.get(outDir, "jobs.tsv"), counts.mkString("", "\n", "\n"))
     println(s"[plan-dump] ${queries.size} queries -> $outDir")
     spark.stop()
   }
