@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, LogicalPlan, Project, Repartition, Sort, Union, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommand
@@ -30,8 +31,8 @@ import org.apache.spark.sql.internal.SQLConf
   *    `coalesce` and the write (a sort under a limit stays a top-k);
   *  - every leaf of its input is a materialized stage read (a
   *    `LogicalQueryStage` whose physical leaves are shuffle stages
-  *    planned for a required distribution), never a scan, a checkpoint or
-  *    a `repartition(n)` stage;
+  *    planned for a required distribution), never a scan, a checkpoint,
+  *    a `repartition(n)` stage or the sort's own range exchange;
   *  - between those stages and the sort, only operators whose size
   *    estimate bounds their output from above (projections, filters,
   *    aggregates, joins, `Expand`, unions, windows), so no `Generate`;
@@ -65,10 +66,12 @@ object SmallFinalSort extends Rule[LogicalPlan] {
   }
 
   /** A materialized stage read, or an operator whose size estimate bounds
-    * its output from above. */
+    * its output from above. A range-partitioned stage is the sort's own
+    * exchange, already run: the sort keeps it. */
   private def bounded(p: LogicalPlan): Boolean = p match {
     case q: LogicalQueryStage => q.isMaterialized && q.physicalPlan.collectLeaves().forall {
-      case s: ShuffleQueryStageExec => s.shuffle.shuffleOrigin == ENSURE_REQUIREMENTS
+      case s: ShuffleQueryStageExec => s.shuffle.shuffleOrigin == ENSURE_REQUIREMENTS &&
+        !s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
       case _ => false
     }
     case _: Project | _: Filter | _: Aggregate | _: Join | _: Expand | _: Union | _: Window |

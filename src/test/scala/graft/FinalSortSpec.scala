@@ -128,6 +128,8 @@ class FinalSortSpec extends AnyFunSuite {
     val (rows, plan) = run(d44(spark, sf0001))
     assert(plan.contains(range), plan)
     assert(plan.contains("REPARTITION_BY_NUM"), plan)
+    // nor is a coalesce added above the range stage once it has run
+    assert(!plan.contains("Coalesce 1"), plan)
     assert(rows == ruleOff(run(d44(spark, sf0001)))._1)
   }
 
