@@ -54,25 +54,10 @@ object ScaleLadder {
   def gen(spark: SparkSession, src: String, dst: String, factor: Int,
           dense: Boolean = false): Unit = {
     require(factor >= 1 && factor <= Suffixes.length)
-    // some testdata generations carry int64-nanos event timestamps
-    // (Tables.events' footer branch); the verbatim copy needs the same
-    // session conf to read them — written back as BIGINT, which
-    // Tables.events also handles
-    // session conf is save/restored: gen() shares the JVM-wide
-    // getOrCreate session with test suites that read timestamp parquet
-    // and must not inherit the nanos override (ADVICE r16)
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val nanosBefore = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
-    try genBody(spark, src, dst, factor, dense)
-    finally nanosBefore match {
-      case Some(v) => spark.conf.set(nanosKey, v)
-      case None => spark.conf.unset(nanosKey)
-    }
-  }
-
-  private def genBody(spark: SparkSession, src: String, dst: String,
-                      factor: Int, dense: Boolean): Unit = {
+    // some testdata generations carry int64-nanos event timestamps; a
+    // session from GraftSession.builder reads them as long, and the
+    // verbatim copy writes them back as BIGINT, which Tables.events
+    // also handles
     def read(t: String) = {
       val df = spark.read.parquet(s"$src/$t.parquet")
       require(!df.isEmpty, s"scale-ladder source table $t at $src is empty")

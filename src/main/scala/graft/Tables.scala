@@ -65,10 +65,15 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
+  def events(s: SparkSession, d: String): DataFrame     = withMicrosTs(load(s, d, "events"))
+  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
   /** events.parquet has stored `ts` two ways across testdata generations:
     * INT64 TIMESTAMP(NANOS) (which Spark's parquet reader rejects unless
     * read as long) and plain TIMESTAMP(MICROS). Branch on the RESOLVED
-    * type so both load to the same microsecond TimestampType:
+    * type so both load to the same microsecond TimestampType, in a batch
+    * read ([[events]]) and a stream ([[graft.streaming.Sources]]) alike:
     *  - nanos-as-long → convert with INTEGER division (`div`): Spark's
     *    `/` on longs casts through double, and ~1.7e18 ns exceeds 2^53,
     *    so `floor(long / 1000)` silently loses low bits (~12.5% of values
@@ -79,8 +84,7 @@ object Tables {
     * `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession.builder`
     * sets for the whole session.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
+  private[graft] def withMicrosTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("CAST(ts AS BIGINT) div 1000")))
@@ -88,7 +92,4 @@ object Tables {
         raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
-  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

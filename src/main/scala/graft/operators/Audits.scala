@@ -531,21 +531,23 @@ object Audits {
   private val SegB = "MACHINERY"
 
   /** Shared two-sample base: one row per order of a SegA/SegB customer —
-    * (n_name, exact cents, is_a tag). orders⋈customer shuffles on the
-    * customer key (both corpus-sized at scale), nation names broadcast.
+    * (n_name, the `keep` order columns, exact cents, is_a tag).
+    * orders⋈customer shuffles on the customer key (both corpus-sized at
+    * scale), nation names broadcast.
     */
-  private def segmentOrderCents(spark: SparkSession, dir: String): DataFrame =
+  private def segmentOrderCents(spark: SparkSession, dir: String,
+                                keep: Seq[String] = Nil): DataFrame =
     Tables.orders(spark, dir)
-      .select(col("o_custkey"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"))
+      .select((col("o_custkey") +: keep.map(col)) :+
+        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"): _*)
       .join(Tables.customer(spark, dir)
           .filter(col("c_mktsegment").isin(SegA, SegB))
           .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(spark, dir)),
         col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("cents"),
-        when(col("c_mktsegment") === SegA, 1L).otherwise(0L).as("is_a"))
+      .select((col("n_name") +: keep.map(col)) ++ Seq(col("cents"),
+        when(col("c_mktsegment") === SegA, 1L).otherwise(0L).as("is_a")): _*)
 
   /** SQL mirror of [[segmentOrderCents]] (CTE body, no leading WITH). */
   private val segmentOrderCentsSql: String =
@@ -773,19 +775,19 @@ object Audits {
   private val Priorities =
     Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 
-  def q100Anova(spark: SparkSession, dir: String): DataFrame = {
-    val dec0 = lit(0L).cast(DecimalType(38, 0))
-    val b = Tables.orders(spark, dir)
-      .select(col("o_orderstatus"), col("o_orderpriority"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"))
+  /** One-way ANOVA across the order priorities, per order status, of the
+    * value column `v` of `b`: the per-status moment frame, its group
+    * count k and the between/within sums of squares (q100, q119).
+    */
+  private def priorityAnova(b: DataFrame, v: String): (DataFrame, Column, Column, Column) = {
     val aggs = Priorities.zipWithIndex.flatMap { case (p, i) =>
       Seq(sum(when(col("o_orderpriority") === p, 1L).otherwise(0L)).as(s"n_$i"),
-        sum(when(col("o_orderpriority") === p, col("cents")).otherwise(0L)).as(s"s_$i"))
+        sum(when(col("o_orderpriority") === p, col(v)).otherwise(0L)).as(s"s_$i"))
     }
     val m = b.groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
-        (Seq(sum(col("cents")).as("s"),
-          sum(col("cents").cast(DecimalType(38, 0)) * col("cents")).as("ss")) ++ aggs): _*)
+        (Seq(sum(col(v)).as("s"),
+          sum(col(v).cast(DecimalType(38, 0)) * col(v)).as("ss")) ++ aggs): _*)
     val dn = col("n").cast(DoubleType)
     // the five group terms in fixed textual order — never an agg over
     // a double
@@ -799,6 +801,32 @@ object Audits {
       when(col(s"n_$i") > 0L, 1L).otherwise(0L)).reduceLeft(_ + _)
     val ssb = sumTerm - col("s").cast(DoubleType) * col("s").cast(DoubleType) / dn
     val ssw = col("ss").cast(DoubleType) - sumTerm
+    (m, k, ssb, ssw)
+  }
+
+  /** The ANOVA oracles' per-priority sums of value column `v` (n_i,
+    * s_i), group count k and between/within sums of squares.
+    */
+  private def priorityAnovaSql(v: String): (String, String, String, String) = {
+    val nAggs = Priorities.zipWithIndex.map { case (p, i) =>
+      s"""    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS BIGINT) AS n_$i,
+         |    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN $v ELSE 0 END) AS BIGINT) AS s_$i""".stripMargin
+    }.mkString(",\n")
+    val terms = Priorities.indices.map(i =>
+      s"CASE WHEN n_$i > 0 THEN CAST(s_$i AS DOUBLE) * CAST(s_$i AS DOUBLE) / CAST(n_$i AS DOUBLE) ELSE 0.0 END")
+      .mkString("(", " + ", ")")
+    val k = Priorities.indices.map(i => s"CASE WHEN n_$i > 0 THEN 1 ELSE 0 END")
+      .mkString("(", " + ", ")")
+    val ssb = s"($terms - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
+    val ssw = s"(CAST(ss AS DOUBLE) - $terms)"
+    (nAggs, k, ssb, ssw)
+  }
+
+  def q100Anova(spark: SparkSession, dir: String): DataFrame = {
+    val b = Tables.orders(spark, dir)
+      .select(col("o_orderstatus"), col("o_orderpriority"),
+        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"))
+    val (m, k, ssb, ssw) = priorityAnova(b, "cents")
     m.select(col("o_orderstatus"), col("n").as("n_orders"), k.as("k_groups"),
         round((ssb / (k - lit(1L)).cast(DoubleType))
           / (ssw / (col("n") - k).cast(DoubleType)), 6).as("f_stat"),
@@ -808,17 +836,7 @@ object Audits {
   }
 
   val q100AnovaSql: String = {
-    val nAggs = Priorities.zipWithIndex.map { case (p, i) =>
-      s"""    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS BIGINT) AS n_$i,
-         |    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN cents ELSE 0 END) AS BIGINT) AS s_$i""".stripMargin
-    }.mkString(",\n")
-    val terms = Priorities.indices.map(i =>
-      s"CASE WHEN n_$i > 0 THEN CAST(s_$i AS DOUBLE) * CAST(s_$i AS DOUBLE) / CAST(n_$i AS DOUBLE) ELSE 0.0 END")
-      .mkString("(", " + ", ")")
-    val k = Priorities.indices.map(i => s"CASE WHEN n_$i > 0 THEN 1 ELSE 0 END")
-      .mkString("(", " + ", ")")
-    val ssb = s"($terms - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
-    val ssw = s"(CAST(ss AS DOUBLE) - $terms)"
+    val (nAggs, k, ssb, ssw) = priorityAnovaSql("cents")
     s"""WITH b AS (
        |  SELECT o_orderstatus, o_orderpriority,
        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
@@ -1260,20 +1278,8 @@ object Audits {
   private val PermB = 64
   private val PermSeed = 111
 
-  def q111PermutationTest(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_orderkey"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"))
-      .join(Tables.customer(spark, dir)
-          .filter(col("c_mktsegment").isin(SegA, SegB))
-          .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("o_orderkey"), col("cents"),
-        when(col("c_mktsegment") === SegA, 1L).otherwise(0L).as("is_a"))
-    permutationTestFrom(base)
-  }
+  def q111PermutationTest(spark: SparkSession, dir: String): DataFrame =
+    permutationTestFrom(segmentOrderCents(spark, dir, Seq("o_orderkey")))
 
   /** Permutation test over any (n_name, o_orderkey unique, cents,
     * is_a ∈ {0,1}) frame — spec entry point.
@@ -1649,25 +1655,7 @@ object Audits {
       .select(col("gkey"), floor(col("med") * 2 + lit(0.5)).cast(LongType).as("med2"))
     val z = b.join(broadcast(med), "gkey")
       .withColumn("z2", abs(lit(2L) * col("cents") - col("med2")))
-    val aggs = Priorities.zipWithIndex.flatMap { case (p, i) =>
-      Seq(sum(when(col("o_orderpriority") === p, 1L).otherwise(0L)).as(s"n_$i"),
-        sum(when(col("o_orderpriority") === p, col("z2")).otherwise(0L)).as(s"s_$i"))
-    }
-    val m = z.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        (Seq(sum(col("z2")).as("s"),
-          sum(col("z2").cast(DecimalType(38, 0)) * col("z2")).as("ss")) ++ aggs): _*)
-    val dn = col("n").cast(DoubleType)
-    val terms = Priorities.indices.map { i =>
-      when(col(s"n_$i") > 0L,
-        col(s"s_$i").cast(DoubleType) * col(s"s_$i").cast(DoubleType)
-          / col(s"n_$i").cast(DoubleType)).otherwise(lit(0.0))
-    }
-    val sumTerm = terms.reduceLeft(_ + _)
-    val k = Priorities.indices.map(i =>
-      when(col(s"n_$i") > 0L, 1L).otherwise(0L)).reduceLeft(_ + _)
-    val ssb = sumTerm - col("s").cast(DoubleType) * col("s").cast(DoubleType) / dn
-    val ssw = col("ss").cast(DoubleType) - sumTerm
+    val (m, k, ssb, ssw) = priorityAnova(z, "z2")
     m.select(col("o_orderstatus"), col("n").as("n_orders"), k.as("k_groups"),
         round((ssb / (k - lit(1L)).cast(DoubleType))
           / (ssw / (col("n") - k).cast(DoubleType)), 6).as("f_bf"))
@@ -1676,17 +1664,7 @@ object Audits {
   }
 
   val q119LeveneSql: String = {
-    val nAggs = Priorities.zipWithIndex.map { case (p, i) =>
-      s"""    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS BIGINT) AS n_$i,
-         |    CAST(SUM(CASE WHEN o_orderpriority = '$p' THEN z2 ELSE 0 END) AS BIGINT) AS s_$i""".stripMargin
-    }.mkString(",\n")
-    val terms = Priorities.indices.map(i =>
-      s"CASE WHEN n_$i > 0 THEN CAST(s_$i AS DOUBLE) * CAST(s_$i AS DOUBLE) / CAST(n_$i AS DOUBLE) ELSE 0.0 END")
-      .mkString("(", " + ", ")")
-    val k = Priorities.indices.map(i => s"CASE WHEN n_$i > 0 THEN 1 ELSE 0 END")
-      .mkString("(", " + ", ")")
-    val ssb = s"($terms - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
-    val ssw = s"(CAST(ss AS DOUBLE) - $terms)"
+    val (nAggs, k, ssb, ssw) = priorityAnovaSql("z2")
     s"""WITH b AS (
        |  SELECT o_orderstatus, o_orderpriority,
        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
@@ -1824,6 +1802,37 @@ object Audits {
   def q128Wasserstein(spark: SparkSession, dir: String): DataFrame =
     wassersteinFrom(eraSplitFrom(spark, dir))
 
+  /** The era-split oracles' `o` (grp, cents, is_a) and `g` (per-cents
+    * era counts c_a, c_b).
+    */
+  private val eraCountsCtesSql: String =
+    """o AS (
+      |  SELECT o_orderstatus AS grp,
+      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
+      |  FROM orders),
+      |g AS (
+      |  SELECT grp, cents,
+      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
+      |  FROM o GROUP BY 1, 2)""".stripMargin
+
+  /** [[eraCountsCtesSql]] with `c` (running counts cum_a, cum_b) and `t`
+    * (era totals n_a, n_b).
+    */
+  private val eraCdfCtesSql: String =
+    s"""$eraCountsCtesSql,
+       |c AS (
+       |  SELECT grp, c_a, c_b,
+       |    CAST(SUM(c_a) OVER w AS BIGINT) AS cum_a,
+       |    CAST(SUM(c_b) OVER w AS BIGINT) AS cum_b
+       |  FROM g
+       |  WINDOW w AS (PARTITION BY grp ORDER BY cents
+       |               ROWS UNBOUNDED PRECEDING)),
+       |t AS (
+       |  SELECT grp,
+       |    CAST(MAX(cum_a) AS BIGINT) AS n_a, CAST(MAX(cum_b) AS BIGINT) AS n_b
+       |  FROM c GROUP BY 1)""".stripMargin
+
   /** Shared (grp, cents, is_a) era-split frame for the ECDF-drift pair. */
   private[graft] def eraSplitFrom(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
@@ -1831,11 +1840,28 @@ object Audits {
         floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("cents"),
         when(col("o_orderdate") < lit("1998-01-01"), 1L).otherwise(0L).as("is_a"))
 
+  /** (grp, cents, c_a, c_b): each grp's era-A and era-B counts per
+    * distinct cents value of an (grp, cents, is_a) frame.
+    */
+  private def eraCounts(o: DataFrame): DataFrame =
+    o.groupBy(col("grp"), col("cents"))
+      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
+
+  /** [[eraCounts]] with both eras' running counts (cum_a, cum_b) up to
+    * each cents value and their totals (n_a, n_b).
+    */
+  private def eraCdf(o: DataFrame): DataFrame = {
+    val cums = Relational.prefixSumByRange(eraCounts(o), Seq("grp"),
+      Seq(col("cents")), Seq("cum_a" -> col("c_a"), "cum_b" -> col("c_b")))
+    val tot = cums.groupBy(col("grp"))
+      .agg(max(col("cum_a")).as("n_a"), max(col("cum_b")).as("n_b"))
+    cums.join(broadcast(tot), "grp")
+  }
+
   /** W1 per grp over any (grp, cents, is_a) frame — spec entry point. */
   private[graft] def wassersteinFrom(o: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val g = o.groupBy(col("grp"), col("cents"))
-      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
+    val g = eraCounts(o)
     val cums = Relational.prefixSumByRange(g, Seq("grp"),
         Seq(col("cents")),
         Seq("cum_a" -> col("c_a"), "cum_b" -> col("c_b"), "rnk" -> lit(1L)))
@@ -1860,15 +1886,7 @@ object Audits {
   }
 
   val q128WassersteinSql: String =
-    """WITH o AS (
-      |  SELECT o_orderstatus AS grp,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
-      |  FROM orders),
-      |g AS (
-      |  SELECT grp, cents,
-      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
-      |  FROM o GROUP BY 1, 2),
+    s"""WITH $eraCountsCtesSql,
       |c AS (
       |  SELECT grp, cents,
       |    CAST(SUM(c_a) OVER w AS BIGINT) AS cum_a,
@@ -1919,13 +1937,7 @@ object Audits {
   /** CvM T per grp over any (grp, cents, is_a) frame — spec entry point. */
   private[graft] def cramerVonMisesFrom(o: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val g = o.groupBy(col("grp"), col("cents"))
-      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
-    val cums = Relational.prefixSumByRange(g, Seq("grp"),
-      Seq(col("cents")), Seq("cum_a" -> col("c_a"), "cum_b" -> col("c_b")))
-    val tot = cums.groupBy(col("grp"))
-      .agg(max(col("cum_a")).as("n_a"), max(col("cum_b")).as("n_b"))
-    cums.join(broadcast(tot), "grp")
+    eraCdf(o)
       .select(col("grp"), col("n_a"), col("n_b"),
         ((col("c_a") + col("c_b")).cast(d38)
           * (col("cum_a").cast(d38) * col("n_b") - col("cum_b").cast(d38) * col("n_a"))
@@ -1943,26 +1955,7 @@ object Audits {
   }
 
   val q129CramerVonMisesSql: String =
-    """WITH o AS (
-      |  SELECT o_orderstatus AS grp,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
-      |  FROM orders),
-      |g AS (
-      |  SELECT grp, cents,
-      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
-      |  FROM o GROUP BY 1, 2),
-      |c AS (
-      |  SELECT grp, c_a, c_b,
-      |    CAST(SUM(c_a) OVER w AS BIGINT) AS cum_a,
-      |    CAST(SUM(c_b) OVER w AS BIGINT) AS cum_b
-      |  FROM g
-      |  WINDOW w AS (PARTITION BY grp ORDER BY cents
-      |               ROWS UNBOUNDED PRECEDING)),
-      |t AS (
-      |  SELECT grp,
-      |    CAST(MAX(cum_a) AS BIGINT) AS n_a, CAST(MAX(cum_b) AS BIGINT) AS n_b
-      |  FROM c GROUP BY 1),
+    s"""WITH $eraCdfCtesSql,
       |m AS (
       |  SELECT grp, n_a, n_b,
       |    SUM(CAST(c_a + c_b AS HUGEINT)
@@ -2011,13 +2004,7 @@ object Audits {
   /** AD A² per grp over any (grp, cents, is_a) frame — spec entry point. */
   private[graft] def andersonDarlingFrom(o: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val g = o.groupBy(col("grp"), col("cents"))
-      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
-    val cums = Relational.prefixSumByRange(g, Seq("grp"),
-      Seq(col("cents")), Seq("cum_a" -> col("c_a"), "cum_b" -> col("c_b")))
-    val tot = cums.groupBy(col("grp"))
-      .agg(max(col("cum_a")).as("n_a"), max(col("cum_b")).as("n_b"))
-    cums.join(broadcast(tot), "grp")
+    eraCdf(o)
       .select(col("grp"), col("n_a"), col("n_b"),
         (col("c_a") + col("c_b")).as("l"),
         (col("cum_a") + col("cum_b")).as("j"),
@@ -2042,26 +2029,7 @@ object Audits {
   }
 
   val q141AndersonDarlingSql: String =
-    """WITH o AS (
-      |  SELECT o_orderstatus AS grp,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
-      |  FROM orders),
-      |g AS (
-      |  SELECT grp, cents,
-      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
-      |  FROM o GROUP BY 1, 2),
-      |c AS (
-      |  SELECT grp, c_a, c_b,
-      |    CAST(SUM(c_a) OVER w AS BIGINT) AS cum_a,
-      |    CAST(SUM(c_b) OVER w AS BIGINT) AS cum_b
-      |  FROM g
-      |  WINDOW w AS (PARTITION BY grp ORDER BY cents
-      |               ROWS UNBOUNDED PRECEDING)),
-      |t AS (
-      |  SELECT grp,
-      |    CAST(MAX(cum_a) AS BIGINT) AS n_a, CAST(MAX(cum_b) AS BIGINT) AS n_b
-      |  FROM c GROUP BY 1),
+    s"""WITH $eraCdfCtesSql,
       |r AS (
       |  SELECT grp, n_a, n_b,
       |    CAST(floor(CAST(c_a + c_b AS DOUBLE)
@@ -2112,8 +2080,7 @@ object Audits {
     */
   private[graft] def effectSizesFrom(o: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val g = o.groupBy(col("grp"), col("cents"))
-      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
+    val g = eraCounts(o)
       .graftCheckpoint(false)
     // prefix input reduced to exactly (key, order, measure input) — the
     // t86 discipline; c_a rejoins by key so the two internal slice
@@ -2155,15 +2122,7 @@ object Audits {
   }
 
   val q143EffectSizesSql: String =
-    """WITH o AS (
-      |  SELECT o_orderstatus AS grp,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
-      |  FROM orders),
-      |g AS (
-      |  SELECT grp, cents,
-      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
-      |  FROM o GROUP BY 1, 2),
+    s"""WITH $eraCountsCtesSql,
       |c AS (
       |  SELECT grp, c_a, c_b,
       |    CAST(SUM(c_b) OVER (PARTITION BY grp ORDER BY cents
@@ -2584,8 +2543,7 @@ object Audits {
     */
   private[graft] def hellingerFrom(o: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val g = o.groupBy(col("grp"), col("cents"))
-      .agg(sum(col("is_a")).as("c_a"), sum(lit(1L) - col("is_a")).as("c_b"))
+    val g = eraCounts(o)
       .graftCheckpoint(false)
     val tot = g.groupBy(col("grp"))
       .agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
@@ -2605,15 +2563,7 @@ object Audits {
   }
 
   val q150HellingerSql: String =
-    """WITH o AS (
-      |  SELECT o_orderstatus AS grp,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-      |    CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS is_a
-      |  FROM orders),
-      |g AS (
-      |  SELECT grp, cents,
-      |    CAST(SUM(is_a) AS BIGINT) AS c_a, CAST(SUM(1 - is_a) AS BIGINT) AS c_b
-      |  FROM o GROUP BY 1, 2),
+    s"""WITH $eraCountsCtesSql,
       |t AS (
       |  SELECT grp, CAST(SUM(c_a) AS BIGINT) AS n_a, CAST(SUM(c_b) AS BIGINT) AS n_b
       |  FROM g GROUP BY 1),

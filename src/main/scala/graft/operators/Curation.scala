@@ -144,25 +144,25 @@ object Curation {
     */
   def advance(state: CurationState, newDocs: DataFrame,
               threshold: Double = 0.35): CurationState = {
-    def pin(df: DataFrame): DataFrame = df.graftCheckpoint(true)
     // stage 1: within-batch exact dedup, then drop content already keyed
     val inBatch = Dedup.dedupExact(
       newDocs.withColumn("__h", graft.functions.HashFns.fastMd5(col("text"))), Seq("__h"), col("doc_id"))
     val fresh = inBatch.join(state.hashKeepers.select("__h"), Seq("__h"), "left_anti")
-    val hashKeepers = pin(state.hashKeepers.unionByName(
-      fresh.select(col("__h"), col("doc_id").as("keeper_id"))))
+    val hashKeepers = state.hashKeepers.unionByName(
+      fresh.select(col("__h"), col("doc_id").as("keeper_id"))).graftCheckpoint(true)
     // band the newcomers once; pair delta = all-bands × new-bands
-    val newBands = pin(Dedup.bandedSignaturesFrom(fresh.drop("__h")))
+    val newBands = Dedup.bandedSignaturesFrom(fresh.drop("__h")).graftCheckpoint(true)
     val allBands = state.bands.unionByName(newBands)
     val newPairs = Dedup.pairsFromBandJoin(allBands, newBands, threshold)
     // CC over star edges of the existing clustering + the pair delta
     val starEdges = state.clusters
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
-    val clusters = pin(Dedup.connectedComponents(
-      starEdges.unionByName(newPairs.select("doc_a", "doc_b")), "doc_a", "doc_b"))
-    val scored = pin(state.scored.unionByName(scoreDocs(fresh)))
-    CurationState(hashKeepers, pin(allBands), clusters, scored)
+    val clusters = Dedup.connectedComponents(
+      starEdges.unionByName(newPairs.select("doc_a", "doc_b")), "doc_a", "doc_b")
+      .graftCheckpoint(true)
+    val scored = state.scored.unionByName(scoreDocs(fresh)).graftCheckpoint(true)
+    CurationState(hashKeepers, allBands.graftCheckpoint(true), clusters, scored)
   }
 
   /** The curated corpus for the current state — c70's output shape. */
@@ -1173,17 +1173,7 @@ object Curation {
        |    SELECT source, unnest(list_transform(range(1, len(t)),
        |      i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS g
        |    FROM tk)),
-       |vocab AS (
-       |  SELECT COUNT(DISTINCT w) AS v FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)),
-       |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
-       |c1 AS (SELECT w1, SUM(c2) AS c1 FROM c2 GROUP BY w1),
-       |model AS (
-       |  SELECT c2.w1, c2.w2,
-       |    CAST(floor(ln(CAST(c2 + 1 AS DOUBLE)
-       |      / CAST(c1 + (SELECT v FROM vocab) AS DOUBLE)) * 1000000000.0 + 0.5)
-       |      AS BIGINT) AS lp_n
-       |  FROM c2 JOIN c1 ON c2.w1 = c1.w1),
+       |${TextOps.addOneBigramModelCtesSql},
        |per_src AS (
        |  SELECT source, COUNT(*) AS n_bigrams, CAST(SUM(lp_n) AS BIGINT) AS sl
        |  FROM pairs JOIN model USING (w1, w2) GROUP BY source),

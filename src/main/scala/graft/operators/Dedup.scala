@@ -520,15 +520,6 @@ object Dedup {
   //    raises past [[CcMaxRounds]] as its oracle twin [[CcSql]] does.
   // ---------------------------------------------------------------------
 
-  /** Materialize one frame with truncated lineage — the [[Checkpoints]]
-    * switch (reliable `checkpoint()` when `spark.graft.checkpointDir` is
-    * set, `localCheckpoint` otherwise; see Checkpoints' doc for the
-    * retention/cleanup contract). Both modes are exercised by
-    * DedupSimilaritySpec's "connectedComponents reliable-checkpoint
-    * mode" test.
-    */
-  private def persistIter(df: DataFrame): DataFrame = df.graftCheckpoint(true)
-
   /** Contraction-round cap of the distributed path. Every round merges
     * at least the group holding each component's minimum label with a
     * neighbor, and the contraction converges in O(log n) rounds on
@@ -543,9 +534,14 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // materialize the (possibly expensive) pair pipeline ONCE before
     // sizing and resolving it — every later action would otherwise
-    // re-execute the full upstream candidate-generation pipeline
-    val sym = persistIter(pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-      .union(pairs.select(col(bCol).as("a"), col(aCol).as("b"))))
+    // re-execute the full upstream candidate-generation pipeline. Every
+    // checkpoint here is the [[Checkpoints]] switch (reliable when
+    // `spark.graft.checkpointDir` is set, local otherwise); both modes are
+    // exercised by DedupSimilaritySpec's "connectedComponents
+    // reliable-checkpoint mode" test
+    val sym = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .union(pairs.select(col(bCol).as("a"), col(aCol).as("b")))
+      .graftCheckpoint(true)
     val integralIds = sym.schema("a").dataType match {
       case LongType | IntegerType => true
       case _ => false
@@ -590,10 +586,10 @@ object Dedup {
 
   private[graft] def distributedComponents(sym: DataFrame,
                                            maxRounds: Int = CcMaxRounds): DataFrame = {
-    var labels = persistIter(sym.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id")))
+    var labels = sym.select(col("a").as("id")).distinct()
+      .withColumn("label", col("id")).graftCheckpoint(true)
     // label-graph edges; contracted (relabeled + dedup'd) every round
-    var edges = persistIter(sym.distinct())
+    var edges = sym.distinct().graftCheckpoint(true)
     var rounds = 0
     // the contracted edge set is SYMMETRIC at every round (`sym` is,
     // relabeling maps both directions, the a≠b filter and distinct
@@ -618,8 +614,9 @@ object Dedup {
       val updated = labels.join(minN, Seq("label"), "left")
         .select(col("id"), least(col("label"), col("nl")).as("label"))
       val jump = updated.select(col("id").as("jid"), col("label").as("jl"))
-      val next = persistIter(updated.join(jump, col("label") === col("jid"), "left")
-        .select(col("id"), coalesce(col("jl"), col("label")).as("label")))
+      val next = updated.join(jump, col("label") === col("jid"), "left")
+        .select(col("id"), coalesce(col("jl"), col("label")).as("label"))
+        .graftCheckpoint(true)
       // every member of a group moves to the same new label, but node L
       // itself need not belong to group L (it may have hooked elsewhere),
       // so an endpoint L is relabeled through its group, never through
@@ -627,12 +624,13 @@ object Dedup {
       // split its component
       val moved = labels.join(next.withColumnRenamed("label", "to"), "id")
         .select(col("label").as("from"), col("to")).distinct()
-      edges = persistIter(edges
+      edges = edges
         .join(moved.withColumnRenamed("from", "a").withColumnRenamed("to", "la"), Seq("a"))
         .join(moved.withColumnRenamed("from", "b").withColumnRenamed("to", "lb"), Seq("b"))
         .select(col("la").as("a"), col("lb").as("b"))
         .filter(col("a") =!= col("b"))
-        .distinct())
+        .distinct()
+        .graftCheckpoint(true)
       labels = next
     }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))

@@ -144,15 +144,22 @@ object Graph {
     st.select(col("node"), col("r")).orderBy(col("r").desc, col("node"))
   }
 
+  /** The directed co-purchase graph `e` (both orientations of every
+    * pair of distinct parts sharing an order, once per shared order)
+    * and its `nodes`, every part that was ever ordered.
+    */
+  private val directedCoPurchaseCtesSql: String =
+    """li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |e AS (
+      |  SELECT a.l_partkey AS src, b.l_partkey AS dst
+      |  FROM li a JOIN li b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+      |nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem)""".stripMargin
+
   val q63PageRankSql: String = {
     val S = PrScale
     val base =
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |e AS (
-         |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-         |  FROM li a JOIN li b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-         |nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem),
+      s"""WITH $directedCoPurchaseCtesSql,
          |deg AS (SELECT src AS node, COUNT(*) AS d FROM e GROUP BY src),
          |n AS (SELECT COUNT(*) AS cnt FROM nodes),
          |r0 AS (SELECT node, CAST($S AS BIGINT) // (SELECT cnt FROM n) AS r FROM nodes)""".stripMargin
@@ -280,6 +287,49 @@ object Graph {
     val stats = und.agg(count(lit(1)).as("n_edges")).crossJoin(nodes)
     stats.crossJoin(tri).select(col("n_nodes"), col("n_edges"), col("n_triangles"))
   }
+
+  /** `und`: each co-purchased part pair once, as (src < dst). */
+  private val coPurchaseCtesSql: String =
+    """li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |und AS MATERIALIZED (
+      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)""".stripMargin
+
+  /** `deg`: each node's degree in `und`. */
+  private val coPurchaseDegCteSql: String =
+    """deg AS MATERIALIZED (
+      |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
+      |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
+      |  GROUP BY node)""".stripMargin
+
+  /** q135's modularity report of the partition `cm` (node, comm) over
+    * `und` with degrees `deg`: one row per community, then Q.
+    */
+  private val modularityReportSql: String =
+    """dc AS (
+      |  SELECT comm, CAST(COUNT(*) AS BIGINT) AS n_nodes,
+      |    CAST(SUM(d) AS BIGINT) AS d_c
+      |  FROM deg JOIN cm USING (node) GROUP BY 1),
+      |ec AS (
+      |  SELECT cs.comm, CAST(COUNT(*) AS BIGINT) AS e_c
+      |  FROM und
+      |  JOIN cm cs ON cs.node = und.src
+      |  JOIN cm cd ON cd.node = und.dst
+      |  WHERE cs.comm = cd.comm
+      |  GROUP BY 1),
+      |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
+      |j AS (
+      |  SELECT dc.comm, dc.n_nodes, dc.d_c, COALESCE(ec.e_c, 0) AS e_c, mm.m,
+      |    CAST(mm.m AS HUGEINT) * 4 * COALESCE(ec.e_c, 0)
+      |      - CAST(dc.d_c AS HUGEINT) * dc.d_c AS q_num
+      |  FROM dc LEFT JOIN ec USING (comm) CROSS JOIN mm),
+      |w AS (SELECT *, CAST(SUM(q_num) OVER () AS HUGEINT) AS q_num_sum FROM j)
+      |SELECT comm, n_nodes, d_c, e_c,
+      |  ROUND(CAST(q_num AS DOUBLE)
+      |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS contribution,
+      |  ROUND(CAST(q_num_sum AS DOUBLE)
+      |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS q
+      |FROM w ORDER BY comm""".stripMargin
 
   /** The li/und/deg/ored CTE block shared by q66 and q82 — the oriented
     * co-purchase graph in DuckDB terms, mirroring [[orientedCoPurchase]].
@@ -415,12 +465,7 @@ object Graph {
 
   val q67KHopReachSql: String = {
     val base =
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e AS (
-        |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-        |nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem),
+      s"""WITH $directedCoPurchaseCtesSql,
         |f0 AS (SELECT node FROM nodes WHERE node % 500 = 0),
         |v0 AS (SELECT node FROM f0)""".stripMargin
     val rounds = (1 to KhopRounds).map { h =>
@@ -469,12 +514,7 @@ object Graph {
 
   val q87WeightedPathSql: String = {
     val base =
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e AS (
-        |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-        |nodes AS (SELECT DISTINCT l_partkey AS node FROM lineitem),
+      s"""WITH $directedCoPurchaseCtesSql,
         |we AS (
         |  SELECT src, dst, CAST(1000000 // COUNT(*) AS BIGINT) AS cost
         |  FROM e GROUP BY src, dst),
@@ -859,10 +899,7 @@ object Graph {
        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
        |  FROM li a JOIN li b
        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |deg AS MATERIALIZED (
-       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-       |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
-       |  GROUP BY node),
+       |$coPurchaseDegCteSql,
        |dh AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS nd FROM deg GROUP BY 1),
        |eh AS (
        |  SELECT LEAST(ds.d, dd.d) AS md, CAST(COUNT(*) AS BIGINT) AS ne
@@ -958,7 +995,7 @@ object Graph {
   }
 
   val q135ModularitySql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       |und AS MATERIALIZED (
       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
       |  FROM li a JOIN li b
@@ -968,30 +1005,7 @@ object Graph {
       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
       |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
       |  GROUP BY node),
-      |dc AS (
-      |  SELECT comm, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-      |    CAST(SUM(d) AS BIGINT) AS d_c
-      |  FROM deg JOIN cm USING (node) GROUP BY 1),
-      |ec AS (
-      |  SELECT cs.comm, CAST(COUNT(*) AS BIGINT) AS e_c
-      |  FROM und
-      |  JOIN cm cs ON cs.node = und.src
-      |  JOIN cm cd ON cd.node = und.dst
-      |  WHERE cs.comm = cd.comm
-      |  GROUP BY 1),
-      |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
-      |j AS (
-      |  SELECT dc.comm, dc.n_nodes, dc.d_c, COALESCE(ec.e_c, 0) AS e_c, mm.m,
-      |    CAST(mm.m AS HUGEINT) * 4 * COALESCE(ec.e_c, 0)
-      |      - CAST(dc.d_c AS HUGEINT) * dc.d_c AS q_num
-      |  FROM dc LEFT JOIN ec USING (comm) CROSS JOIN mm),
-      |w AS (SELECT *, CAST(SUM(q_num) OVER () AS HUGEINT) AS q_num_sum FROM j)
-      |SELECT comm, n_nodes, d_c, e_c,
-      |  ROUND(CAST(q_num AS DOUBLE)
-      |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS contribution,
-      |  ROUND(CAST(q_num_sum AS DOUBLE)
-      |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS q
-      |FROM w ORDER BY comm""".stripMargin
+      |$modularityReportSql""".stripMargin
 
   // ---------------------------------------------------------------------
   // q154: one Louvain local-move sweep (Blondel et al. 2008, the
@@ -1158,15 +1172,9 @@ object Graph {
   }
 
   val q154LouvainSweepSql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      |und AS MATERIALIZED (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    s"""WITH $coPurchaseCtesSql,
       |cm AS (SELECT p_partkey AS node, p_brand AS comm FROM part),
-      |deg AS MATERIALIZED (
-      |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-      |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
-      |  GROUP BY node),
+      |$coPurchaseDegCteSql,
       |nodes AS MATERIALIZED (SELECT deg.node, deg.d, cm.comm FROM deg JOIN cm USING (node)),
       |dc AS MATERIALIZED (
       |  SELECT comm, CAST(COUNT(*) AS BIGINT) AS n_before, CAST(SUM(d) AS BIGINT) AS d_c
@@ -1388,14 +1396,8 @@ object Graph {
          |  qv${k - 1}.q AS q_before, qv$k.q AS q_after
          |FROM qv${k - 1} CROSS JOIN qv$k""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |und AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |deg AS MATERIALIZED (
-       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-       |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
-       |  GROUP BY node),
+    s"""WITH $coPurchaseCtesSql,
+       |$coPurchaseDegCteSql,
        |mm AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
        |cm0 AS MATERIALIZED (
        |  SELECT deg.node, p.p_brand AS comm FROM deg
@@ -1469,7 +1471,10 @@ object Graph {
         count(lit(1)).over(Window.partitionBy(col("label"))))
       .orderBy(col("node"))
 
-  val q152LabelPropagationSql: String = {
+  /** q152's label-propagation rounds over `und`: `l$LpaRounds` holds
+    * each node's final label.
+    */
+  private val lpaCtesSql: String = {
     def round(k: Int): String =
       s"""l$k AS MATERIALIZED (
          |  SELECT node, label FROM (
@@ -1479,14 +1484,15 @@ object Graph {
          |    FROM nb JOIN l${k - 1} l ON l.node = nb.nbr
          |    GROUP BY nb.node, l.label) t
          |  WHERE rn = 1)""".stripMargin
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |und AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    s"""$coPurchaseCtesSql,
        |nb AS MATERIALIZED (
        |  SELECT src AS node, dst AS nbr FROM und UNION ALL SELECT dst, src FROM und),
        |l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM nb),
-       |${(1 to LpaRounds).map(round).mkString(",\n")}
+       |${(1 to LpaRounds).map(round).mkString(",\n")}""".stripMargin
+  }
+
+  val q152LabelPropagationSql: String = {
+    s"""WITH $lpaCtesSql
        |SELECT node, label,
        |  CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS n_members
        |FROM l$LpaRounds ORDER BY node""".stripMargin
@@ -1512,52 +1518,10 @@ object Graph {
   }
 
   val q153LpaModularitySql: String = {
-    def round(k: Int): String =
-      s"""l$k AS MATERIALIZED (
-         |  SELECT node, label FROM (
-         |    SELECT nb.node, l.label,
-         |      ROW_NUMBER() OVER (PARTITION BY nb.node
-         |        ORDER BY COUNT(*) DESC, l.label ASC) AS rn
-         |    FROM nb JOIN l${k - 1} l ON l.node = nb.nbr
-         |    GROUP BY nb.node, l.label) t
-         |  WHERE rn = 1)""".stripMargin
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |und AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |nb AS MATERIALIZED (
-       |  SELECT src AS node, dst AS nbr FROM und UNION ALL SELECT dst, src FROM und),
-       |l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM nb),
-       |${(1 to LpaRounds).map(round).mkString(",\n")},
+    s"""WITH $lpaCtesSql,
        |cm AS MATERIALIZED (SELECT node, label AS comm FROM l$LpaRounds),
-       |deg AS MATERIALIZED (
-       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
-       |    SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
-       |  GROUP BY node),
-       |dc AS (
-       |  SELECT comm, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-       |    CAST(SUM(d) AS BIGINT) AS d_c
-       |  FROM deg JOIN cm USING (node) GROUP BY 1),
-       |ec AS (
-       |  SELECT cs.comm, CAST(COUNT(*) AS BIGINT) AS e_c
-       |  FROM und
-       |  JOIN cm cs ON cs.node = und.src
-       |  JOIN cm cd ON cd.node = und.dst
-       |  WHERE cs.comm = cd.comm
-       |  GROUP BY 1),
-       |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
-       |j AS (
-       |  SELECT dc.comm, dc.n_nodes, dc.d_c, COALESCE(ec.e_c, 0) AS e_c, mm.m,
-       |    CAST(mm.m AS HUGEINT) * 4 * COALESCE(ec.e_c, 0)
-       |      - CAST(dc.d_c AS HUGEINT) * dc.d_c AS q_num
-       |  FROM dc LEFT JOIN ec USING (comm) CROSS JOIN mm),
-       |w AS (SELECT *, CAST(SUM(q_num) OVER () AS HUGEINT) AS q_num_sum FROM j)
-       |SELECT comm, n_nodes, d_c, e_c,
-       |  ROUND(CAST(q_num AS DOUBLE)
-       |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS contribution,
-       |  ROUND(CAST(q_num_sum AS DOUBLE)
-       |    / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)), 6) AS q
-       |FROM w ORDER BY comm""".stripMargin
+       |$coPurchaseDegCteSql,
+       |$modularityReportSql""".stripMargin
   }
 
   val defs: Seq[QueryDef] = Seq(

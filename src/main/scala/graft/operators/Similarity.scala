@@ -28,6 +28,89 @@ object Similarity {
   private val K = 5
   private val NumQueries = 10 // queries = vec_id < 10
 
+  /** Each query's K nearest candidates by exact cosine, ties by
+    * neighbor id, from (query_id, qe, neighbor_id, ne) candidate pairs.
+    */
+  private def topKByCosine(pairs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    pairs
+      .withColumn("sim", Vectors.vecCosine(col("qe"), col("ne")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= K)
+      .select(col("query_id"), col("rn"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
+      .orderBy(col("query_id"), col("rn"))
+  }
+
+  /** [[topKByCosine]] on the int8 grid: exact integer dot products of
+    * each pair's query vector `qq` and neighbor vector `nv`.
+    */
+  private def topKByQdot(pairs: DataFrame, nv: String): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("qdot").desc, col("neighbor_id").asc)
+    pairs
+      .withColumn("qdot", aggregate(zip_with(col("qq"), col(nv), (a, b) => a * b),
+        lit(0L), (acc, v) => acc + v))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= K)
+      .select(col("query_id"), col("rn"), col("neighbor_id"), col("qdot"))
+      .orderBy(col("query_id"), col("rn"))
+  }
+
+  /** Each query's K nearest by asymmetric PQ distance: sums the table
+    * distance `dn` of every (query_id, vec_id) candidate's codes.
+    */
+  private def topKByAdist(codes: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adist_n").asc, col("neighbor_id").asc)
+    codes
+      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+      .agg(sum(col("dn")).as("adist_n"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= K)
+      .select(col("query_id"), col("rn"), col("neighbor_id"),
+        (col("adist_n").cast(DoubleType) / lit(1e9)).as("adist"))
+      .orderBy(col("query_id"), col("rn"))
+  }
+
+  /** The oracles' top-K by cosine over `scored` (query_id, neighbor_id,
+    * sim), ties by neighbor id.
+    */
+  private val cosineTopKSql: String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, sim,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rn
+       |  FROM scored)
+       |SELECT query_id, rn, neighbor_id, ROUND(sim, 6) AS sim
+       |FROM ranked
+       |WHERE rn <= $K
+       |ORDER BY query_id, rn""".stripMargin
+
+  /** [[cosineTopKSql]] on the int8 grid: `scored` carries qdot. */
+  private val qdotTopKSql: String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, qdot,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY qdot DESC, neighbor_id ASC) AS rn
+       |  FROM scored)
+       |SELECT query_id, rn, neighbor_id, qdot
+       |FROM ranked WHERE rn <= $K
+       |ORDER BY query_id, rn""".stripMargin
+
+  /** Top-K by asymmetric PQ distance over `scored` (query_id,
+    * neighbor_id, adist_n).
+    */
+  private val adistTopKSql: String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, adist_n,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY adist_n ASC, neighbor_id ASC) AS rn
+       |  FROM scored)
+       |SELECT query_id, rn, neighbor_id,
+       |  CAST(adist_n AS DOUBLE) / 1000000000.0 AS adist
+       |FROM ranked WHERE rn <= $K
+       |ORDER BY query_id, rn""".stripMargin
+
   // -------------------------------------------------------------------
   // q30: exact brute-force top-k per query.
   // -------------------------------------------------------------------
@@ -36,17 +119,10 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
+    topKByCosine(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .crossJoin(broadcast(queries))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", Vectors.vecCosine(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rn"))
+      .filter(col("neighbor_id") =!= col("query_id")))
   }
 
   val q30AnnBruteSql: String =
@@ -60,14 +136,7 @@ object Similarity {
        |     sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
        |  FROM q CROSS JOIN embeddings e
        |  WHERE e.vec_id <> query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, ROUND(sim, 6) AS sim
-       |FROM ranked
-       |WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$cosineTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q31: LSH-bucketed ANN. md5-derived Rademacher hyperplanes (seeded),
@@ -160,14 +229,7 @@ object Similarity {
        |  FROM cand
        |  JOIN embeddings ne ON ne.vec_id = neighbor_id
        |  JOIN embeddings qe ON qe.vec_id = query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, ROUND(sim, 6) AS sim
-       |FROM ranked
-       |WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$cosineTopKSql""".stripMargin
 
   def q31AnnLsh(spark: SparkSession, dir: String): DataFrame =
     annLshConfigurable(spark, dir, LshSeed, NumTables, BitsPerTable)
@@ -190,16 +252,9 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
       .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    cand
+    topKByCosine(cand
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .withColumn("sim", Vectors.vecCosine(col("qe"), col("ne")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rn"))
+      .join(broadcast(queries), "query_id"))
   }
 
   // -------------------------------------------------------------------
@@ -340,55 +395,43 @@ object Similarity {
       .withColumn("crn", row_number().over(wAssign))
       .filter(col("crn") === 1)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"), col("cid"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cid").asc)
-    val probed = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", Vectors.vecCosine(col("qe"), col("ce")))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= IvfProbe)
-      .select(col("query_id"), col("qe"), col("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probed), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", Vectors.vecCosine(col("qe"), col("ne")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rn"))
+    val probed = nearest(
+        e.filter(col("vec_id") < NumQueries)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+        "query_id", "qe", cents, IvfProbe)
+    topKByCosine(assigned.join(broadcast(probed), Seq("cid"))
+      .filter(col("neighbor_id") =!= col("query_id")))
   }
 
-  def q34AnnIvfSql: String =
-    s"""WITH ${centsSqlCte("cents")},
-       |assigned AS (
+  /** The IVF oracles' `assigned` (each vector's nearest centroid in
+    * `cents`), `probed` (each query's IvfProbe nearest) and `scored`
+    * (cosine of every query to the members of its probed cells).
+    */
+  private def ivfScoredCtesSql(cents: String): String =
+    s"""assigned AS (
        |  SELECT vec_id AS neighbor_id, embedding AS ne, cid FROM (
        |    SELECT e.vec_id, e.embedding, c.cid,
        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |        ORDER BY ${cosSql("e.embedding", "c.ce")} DESC, c.cid ASC) AS crn
-       |    FROM embeddings e CROSS JOIN cents c) t
+       |    FROM embeddings e CROSS JOIN $cents c) t
        |  WHERE crn = 1),
        |probed AS (
        |  SELECT query_id, qe, cid FROM (
        |    SELECT q.vec_id AS query_id, q.embedding AS qe, c.cid,
        |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
        |        ORDER BY ${cosSql("q.embedding", "c.ce")} DESC, c.cid ASC) AS crn
-       |    FROM embeddings q CROSS JOIN cents c
+       |    FROM embeddings q CROSS JOIN $cents c
        |    WHERE q.vec_id < $NumQueries) t
        |  WHERE crn <= $IvfProbe),
        |scored AS (
        |  SELECT query_id, neighbor_id, ${cosSql("qe", "ne")} AS sim
        |  FROM probed JOIN assigned USING (cid)
-       |  WHERE neighbor_id <> query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, ROUND(sim, 6) AS sim
-       |FROM ranked
-       |WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |  WHERE neighbor_id <> query_id)""".stripMargin
+
+  def q34AnnIvfSql: String =
+    s"""WITH ${centsSqlCte("cents")},
+       |${ivfScoredCtesSql("cents")},
+       |$cosineTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q35: IVF with LloydRounds k-means refinement rounds — q34's bounded
@@ -461,15 +504,8 @@ object Similarity {
         e.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
         "query_id", "qe", cents, IvfProbe)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probed), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", Vectors.vecCosine(col("qe"), col("ne")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rn"))
+    topKByCosine(assigned.join(broadcast(probed), Seq("cid"))
+      .filter(col("neighbor_id") =!= col("query_id")))
   }
 
   def q35AnnIvfLloydSql: String = annIvfLloydSql(LloydRounds)
@@ -500,33 +536,8 @@ object Similarity {
     val fin = s"cents$rounds"
     s"""WITH ${centsSqlCte("cents0")},
        |$roundCtes,
-       |assigned AS (
-       |  SELECT vec_id AS neighbor_id, embedding AS ne, cid FROM (
-       |    SELECT e.vec_id, e.embedding, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${cosSql("e.embedding", "c.ce")} DESC, c.cid ASC) AS crn
-       |    FROM embeddings e CROSS JOIN $fin c) t
-       |  WHERE crn = 1),
-       |probed AS (
-       |  SELECT query_id, qe, cid FROM (
-       |    SELECT q.vec_id AS query_id, q.embedding AS qe, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${cosSql("q.embedding", "c.ce")} DESC, c.cid ASC) AS crn
-       |    FROM embeddings q CROSS JOIN $fin c
-       |    WHERE q.vec_id < $NumQueries) t
-       |  WHERE crn <= $IvfProbe),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${cosSql("qe", "ne")} AS sim
-       |  FROM probed JOIN assigned USING (cid)
-       |  WHERE neighbor_id <> query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, ROUND(sim, 6) AS sim
-       |FROM ranked
-       |WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |${ivfScoredCtesSql(fin)},
+       |$cosineTopKSql""".stripMargin
   }
 
   // -------------------------------------------------------------------
@@ -591,17 +602,9 @@ object Similarity {
       .repartition(spark.sessionState.conf.numShufflePartitions)
     val queries = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("qe").as("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qdot").desc, col("neighbor_id").asc)
-    e.select(col("vec_id").as("neighbor_id"), col("qe"))
+    topKByQdot(e.select(col("vec_id").as("neighbor_id"), col("qe"))
       .crossJoin(broadcast(queries))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("qdot", aggregate(zip_with(col("qq"), col("qe"), (a, b) => a * b),
-        lit(0L), (acc, v) => acc + v))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("qdot"))
-      .orderBy(col("query_id"), col("rn"))
+      .filter(col("neighbor_id") =!= col("query_id")), "qe")
   }
 
   val q47AnnSq8Sql: String =
@@ -616,14 +619,7 @@ object Similarity {
        |      p -> p[1] * p[2])) AS BIGINT) AS qdot
        |  FROM q CROSS JOIN qz c
        |  WHERE c.vec_id <> q.query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, qdot,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY qdot DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, qdot
-       |FROM ranked WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$qdotTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q48: IVF-SQ8 — the composition a 100 TB corpus actually runs: q34's
@@ -653,25 +649,13 @@ object Similarity {
       .filter(col("crn") === 1)
       .select(col("vec_id").as("neighbor_id"),
         quantized(col("embedding")).as("nq"), col("cid"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cid").asc)
-    val probed = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", Vectors.vecCosine(col("qe"), col("ce")))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= IvfProbe)
+    val probed = nearest(
+        e.filter(col("vec_id") < NumQueries)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+        "query_id", "qe", cents, IvfProbe)
       .select(col("query_id"), quantized(col("qe")).as("qq"), col("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qdot").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probed), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("qdot", aggregate(zip_with(col("qq"), col("nq"), (a, b) => a * b),
-        lit(0L), (acc, v) => acc + v))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("qdot"))
-      .orderBy(col("query_id"), col("rn"))
+    topKByQdot(assigned.join(broadcast(probed), Seq("cid"))
+      .filter(col("neighbor_id") =!= col("query_id")), "nq")
   }
 
   val q48AnnIvfSq8Sql: String =
@@ -701,14 +685,7 @@ object Similarity {
        |      p -> p[1] * p[2])) AS BIGINT) AS qdot
        |  FROM probed JOIN assigned USING (cid)
        |  WHERE neighbor_id <> query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, qdot,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY qdot DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id, qdot
-       |FROM ranked WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$qdotTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q49: product-quantization ANN (PQ with asymmetric distance, the
@@ -805,23 +782,13 @@ object Similarity {
           .cast(org.apache.spark.sql.types.LongType).as("dn"))
 
   def q49AnnPq(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     val raw = Tables.embeddings(spark, dir)
     val e = raw.repartition(spark.sessionState.conf.numShufflePartitions)
     val book = pqBook(raw)
     val encoded = pqEncode(e, book)
     val dtab = pqDistTables(e, book)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist_n").asc, col("neighbor_id").asc)
-    encoded.join(broadcast(dtab), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("dn")).as("adist_n"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        (col("adist_n").cast(DoubleType) / lit(1e9)).as("adist"))
-      .orderBy(col("query_id"), col("rn"))
+    topKByAdist(encoded.join(broadcast(dtab), Seq("m", "code"))
+      .filter(col("vec_id") =!= col("query_id")))
   }
 
   /** Shared SQL fragments mirroring [[pqSubvectors]]/[[pqBook]]/
@@ -867,15 +834,7 @@ object Similarity {
        |  FROM encoded e JOIN dtab d ON e.m = d.m AND e.code = d.code
        |  WHERE e.vec_id <> d.query_id
        |  GROUP BY 1, 2),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, adist_n,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY adist_n ASC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id,
-       |  CAST(adist_n AS DOUBLE) / 1000000000.0 AS adist
-       |FROM ranked WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$adistTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q51: IVF-PQ — the remaining cell of the IVF × {flat, SQ8, PQ}
@@ -896,7 +855,6 @@ object Similarity {
   // touches only probed-cell members.
   // -------------------------------------------------------------------
   def q51AnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     Vectors.register(spark)
     val raw = Tables.embeddings(spark, dir)
     val e = raw.repartition(spark.sessionState.conf.numShufflePartitions)
@@ -919,17 +877,8 @@ object Similarity {
     val cand = assigned.join(broadcast(probed), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist_n").asc, col("neighbor_id").asc)
-    cand.join(encoded, Seq("vec_id"))
-      .join(broadcast(dtab), Seq("query_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("dn")).as("adist_n"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        (col("adist_n").cast(DoubleType) / lit(1e9)).as("adist"))
-      .orderBy(col("query_id"), col("rn"))
+    topKByAdist(cand.join(encoded, Seq("vec_id"))
+      .join(broadcast(dtab), Seq("query_id", "m", "code")))
   }
 
   val q51AnnIvfPqSql: String =
@@ -963,15 +912,7 @@ object Similarity {
        |  JOIN encoded e ON e.vec_id = c.vec_id
        |  JOIN dtab d ON d.query_id = c.query_id AND d.m = e.m AND d.code = e.code
        |  GROUP BY 1, 2),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, adist_n,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY adist_n ASC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |SELECT query_id, rn, neighbor_id,
-       |  CAST(adist_n AS DOUBLE) / 1000000000.0 AS adist
-       |FROM ranked WHERE rn <= $K
-       |ORDER BY query_id, rn""".stripMargin
+       |$adistTopKSql""".stripMargin
 
   // -------------------------------------------------------------------
   // q50: hybrid retrieval — the two-stage lexical→semantic search a

@@ -53,6 +53,115 @@ object Temporal {
       .agg(sum(col("pc")).as("rev_c"))
   }
 
+  /** (day, x_c, y_c): daily order revenue cents beside daily shipped
+    * quantity hundredths, on the days both occur — q142, q145, q147.
+    */
+  private def pairedDaily(spark: SparkSession, dir: String): DataFrame = {
+    val x = Tables.orders(spark, dir)
+      .select(to_date(col("o_orderdate")).as("day"),
+        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
+      .groupBy(col("day")).agg(sum(col("pc")).as("x_c"))
+    val y = Tables.lineitem(spark, dir)
+      .select(to_date(col("l_shipdate")).as("day"),
+        floor(col("l_quantity") * lit(100.0) + lit(0.5)).cast(LongType).as("qc"))
+      .groupBy(col("day")).agg(sum(col("qc")).as("y_c"))
+    x.join(y, "day")
+  }
+
+  /** (day, rev_c, i): a daily series with its 1-based day index,
+    * checkpointed for the several passes each consumer makes over it.
+    */
+  private def dayIndexed(daily: DataFrame): DataFrame =
+    daily.select(col("day"), col("rev_c"))
+      .withColumn("i", row_number().over(Window.orderBy(col("day"))).cast(LongType))
+      .graftCheckpoint(false)
+
+  /** The oracles' `daily` CTE, written apart from [[dailyRevenue]]:
+    * (day, rev_c), or (grp, day, rev_c) per order status.
+    */
+  private def dailyRevenueSql(byStatus: Boolean): String = {
+    val (grp, keys) = if (byStatus) ("o_orderstatus AS grp, ", "1, 2") else ("", "1")
+    s"""daily AS (
+       |  SELECT ${grp}CAST(o_orderdate AS DATE) AS day,
+       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
+       |  FROM orders GROUP BY $keys)""".stripMargin
+  }
+
+  /** `daily` with `idx`, its 1-based day index, and `d`, each day's
+    * revenue centered on the n-scaled mean (dv = n·rev_c − Σrev_c).
+    */
+  private val centeredDaysCtesSql: String =
+    s"""${dailyRevenueSql(byStatus = false)},
+       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
+       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s
+       |  FROM idx),
+       |d AS (SELECT i, n, n * rev_c - s AS dv FROM idx CROSS JOIN st)""".stripMargin
+
+  /** q120's nano-snapped autocorrelations `r` (lag, n, r9) at lags 1..maxLag. */
+  private def acfCtesSql(maxLag: Int): String =
+    s"""$centeredDaysCtesSql,
+       |den AS (SELECT SUM(CAST(dv AS HUGEINT) * dv) AS den FROM d),
+       |num AS (
+       |  SELECT a.i - b.i AS lag, SUM(CAST(a.dv AS HUGEINT) * b.dv) AS num,
+       |    CAST(MAX(a.n) AS BIGINT) AS n
+       |  FROM d a JOIN d b ON b.i < a.i AND a.i - b.i <= $maxLag
+       |  GROUP BY 1),
+       |r AS (
+       |  SELECT lag, n,
+       |    CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS r9
+       |  FROM num CROSS JOIN den)""".stripMargin
+
+  /** Per-status `daily` with `idx`, each status's 1-based day index. */
+  private val statusDayIndexCtesSql: String =
+    s"""${dailyRevenueSql(byStatus = true)},
+       |idx AS (
+       |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
+       |  FROM daily)""".stripMargin
+
+  /** q133's per-status OLS trend fit: `r` holds `cols` and each day's
+    * milli-cent residual r3 (statuses with fewer than 3 days drop).
+    */
+  private def olsResidualCtesSql(cols: String): String =
+    s"""$statusDayIndexCtesSql,
+       |st AS (
+       |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(i) AS BIGINT) AS si,
+       |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(i * i) AS BIGINT) AS sii,
+       |    SUM(CAST(i AS HUGEINT) * rev_c) AS siy
+       |  FROM idx GROUP BY 1
+       |  HAVING COUNT(*) >= 3),
+       |vd AS (
+       |  SELECT grp, n, si, sy,
+       |    CAST(sii AS HUGEINT) * n - CAST(si AS HUGEINT) * si AS v,
+       |    siy * n - CAST(si AS HUGEINT) * sy AS nm
+       |  FROM st),
+       |r AS (
+       |  SELECT $cols,
+       |    CAST(floor(CAST(CAST(rev_c AS HUGEINT) * v * n - v * sy + nm * si
+       |        - nm * n * i AS DOUBLE)
+       |      / CAST(v * n AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS r3
+       |  FROM idx JOIN vd USING (grp))""".stripMargin
+
+  /** `ss`: each status's residual sum of squares, zero-residual statuses dropped. */
+  private val residualSsCteSql: String =
+    """ss AS (
+      |  SELECT grp, SUM(CAST(r3 AS HUGEINT) * r3) AS ss2,
+      |    CAST(MAX(n) AS BIGINT) AS nn
+      |  FROM r GROUP BY 1
+      |  HAVING SUM(CAST(r3 AS HUGEINT) * r3) > 0)""".stripMargin
+
+  /** The paired daily series `x` (order revenue cents) and `y` (shipped
+    * quantity hundredths) of q142, q145 and q147.
+    */
+  private val pairedDailySql: String =
+    """x AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS day,
+      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x_c
+      |  FROM orders GROUP BY 1),
+      |y AS (
+      |  SELECT CAST(l_shipdate AS DATE) AS day,
+      |    CAST(SUM(CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS y_c
+      |  FROM lineitem GROUP BY 1)""".stripMargin
+
   // ---------------------------------------------------------------------
   // q104: Kaplan-Meier survival estimate of click→purchase latency.
   // Cohort: each user's FIRST click opens an observation; the first
@@ -75,7 +184,11 @@ object Temporal {
   // ln(1 − d/n) nano-snaps to BIGINT, the running product is a prefix
   // SUM of those integers, and exp() runs once per output row.
   // ---------------------------------------------------------------------
-  def q104KaplanMeier(spark: SparkSession, dir: String): DataFrame = {
+  /** Each clicking user's (user_id, c first click, l last event, pmin
+    * first purchase at-or-after c, or null) in event micros: the
+    * click→purchase cohort of q104 and q130.
+    */
+  private def clickToPurchase(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tus"))
     val u = e.groupBy(col("user_id"))
@@ -88,7 +201,29 @@ object Temporal {
       .join(u.select(col("user_id"), col("c")), "user_id")
       .filter(col("tus") >= col("c"))
       .groupBy(col("user_id")).agg(min(col("tus")).as("pmin"))
-    val dur = u.join(p, Seq("user_id"), "left")
+    u.join(p, Seq("user_id"), "left")
+  }
+
+  /** The oracles' click→purchase cohort: `u` (user_id, c, l) and `p`
+    * (user_id, pmin) over `e`, the events in micros.
+    */
+  private val clickPurchaseCtesSql: String =
+    """e AS (
+      |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
+      |u AS (
+      |  SELECT user_id,
+      |    MIN(CASE WHEN event_type = 'click' THEN tus END) AS c,
+      |    CAST(MAX(tus) AS BIGINT) AS l
+      |  FROM e GROUP BY 1
+      |  HAVING MIN(CASE WHEN event_type = 'click' THEN tus END) IS NOT NULL),
+      |p AS (
+      |  SELECT e.user_id, CAST(MIN(tus) AS BIGINT) AS pmin
+      |  FROM e JOIN u USING (user_id)
+      |  WHERE event_type = 'purchase' AND tus >= c
+      |  GROUP BY 1)""".stripMargin
+
+  def q104KaplanMeier(spark: SparkSession, dir: String): DataFrame = {
+    val dur = clickToPurchase(spark, dir)
       .select(
         expr("(coalesce(pmin, l) - c) div 1000000L").cast(LongType).as("dur_s"),
         when(col("pmin").isNotNull, 1L).otherwise(0L).as("obs"))
@@ -135,19 +270,7 @@ object Temporal {
   }
 
   val q104KaplanMeierSql: String =
-    """WITH e AS (
-      |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-      |u AS (
-      |  SELECT user_id,
-      |    MIN(CASE WHEN event_type = 'click' THEN tus END) AS c,
-      |    CAST(MAX(tus) AS BIGINT) AS l
-      |  FROM e GROUP BY 1
-      |  HAVING MIN(CASE WHEN event_type = 'click' THEN tus END) IS NOT NULL),
-      |p AS (
-      |  SELECT e.user_id, CAST(MIN(tus) AS BIGINT) AS pmin
-      |  FROM e JOIN u USING (user_id)
-      |  WHERE event_type = 'purchase' AND tus >= c
-      |  GROUP BY 1),
+    s"""WITH $clickPurchaseCtesSql,
       |dur AS (
       |  SELECT CAST((COALESCE(pmin, l) - c) // 1000000 AS BIGINT) AS dur_s,
       |    CASE WHEN pmin IS NOT NULL THEN 1 ELSE 0 END AS obs
@@ -246,10 +369,7 @@ object Temporal {
   }
 
   val q105SeasonalDecomposeSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
       |keyed AS (
       |  SELECT *, CAST(day - DATE '1970-01-01' AS BIGINT) AS eday,
       |    CAST((day - DATE '1970-01-01') % 7 AS INT) AS dow
@@ -515,24 +635,7 @@ object Temporal {
   }
 
   val q120AcfSql: String =
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1),
-       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
-       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s
-       |  FROM idx),
-       |d AS (SELECT i, n, n * rev_c - s AS dv FROM idx CROSS JOIN st),
-       |den AS (SELECT SUM(CAST(dv AS HUGEINT) * dv) AS den FROM d),
-       |num AS (
-       |  SELECT a.i - b.i AS lag, SUM(CAST(a.dv AS HUGEINT) * b.dv) AS num,
-       |    CAST(MAX(a.n) AS BIGINT) AS n
-       |  FROM d a JOIN d b ON b.i < a.i AND a.i - b.i <= $AcfMaxLag
-       |  GROUP BY 1),
-       |r AS (
-       |  SELECT lag, n,
-       |    CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS r9
-       |  FROM num CROSS JOIN den),
+    s"""WITH ${acfCtesSql(AcfMaxLag)},
        |t AS (
        |  SELECT lag, n, r9,
        |    (r9 * r9) // (1000000000 * (n - lag)) AS term9
@@ -572,11 +675,8 @@ object Temporal {
     */
   private[graft] def theilSenFrom(daily: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val wi = Window.orderBy(col("day"))
     // calendar-bounded frame; three consumers (pairs×2, residuals)
-    val idx = daily.select(col("day"), col("rev_c"))
-      .withColumn("i", row_number().over(wi).cast(LongType))
-      .graftCheckpoint(false)
+    val idx = dayIndexed(daily)
     val a = idx.select(col("i").as("ia"), col("rev_c").as("ra"))
     val b = idx.select(col("i").as("ib"), col("rev_c").as("rb"))
     val slopes = a.join(b, col("ib") > col("ia"))
@@ -621,10 +721,7 @@ object Temporal {
   }
 
   val q121TheilSenSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
       |pairs AS (
       |  SELECT CAST(floor(CAST(b.rev_c - a.rev_c AS DOUBLE) / (b.i - a.i) * 1e6 + 0.5) AS BIGINT) AS s6
@@ -682,11 +779,8 @@ object Temporal {
     * series — spec entry point.
     */
   private[graft] def mannKendallFrom(daily: DataFrame): DataFrame = {
-    val wi = Window.orderBy(col("day"))
     // calendar-bounded frame; two consumers (pair frame ×2 sides, ties)
-    val idx = daily.select(col("day"), col("rev_c"))
-      .withColumn("i", row_number().over(wi).cast(LongType))
-      .graftCheckpoint(false)
+    val idx = dayIndexed(daily)
     val a = idx.select(col("i").as("ia"), col("rev_c").as("ra"))
     val b = idx.select(col("i").as("ib"), col("rev_c").as("rb"))
     val s = a.join(b, col("ib") > col("ia"))
@@ -710,10 +804,7 @@ object Temporal {
   }
 
   val q122MannKendallSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
       |s AS (
       |  SELECT CAST(SUM(CASE WHEN b.rev_c > a.rev_c THEN 1
@@ -763,10 +854,7 @@ object Temporal {
     */
   private[graft] def cusumFrom(daily: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val wi = Window.orderBy(col("day"))
-    val idx = daily.select(col("day"), col("rev_c"))
-      .withColumn("i", row_number().over(wi).cast(LongType))
-      .graftCheckpoint(false)
+    val idx = dayIndexed(daily)
     val st = idx.agg(count(lit(1)).as("n"), sum(col("rev_c")).as("s"))
     // integral scaled path: c_t = Σ_{s≤t} (n·x_s − S) over |days| rows
     val wc = Window.orderBy(col("i"))
@@ -792,10 +880,7 @@ object Temporal {
   }
 
   val q123CusumSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, day, rev_c FROM daily),
       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s FROM idx),
       |path AS (
@@ -877,10 +962,7 @@ object Temporal {
   }
 
   val q124RunsTestSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
       |nrow AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days FROM daily),
       |vr AS (
       |  SELECT rev_c, ROW_NUMBER() OVER (ORDER BY rev_c, day) AS vrank
@@ -946,10 +1028,7 @@ object Temporal {
     */
   private[graft] def periodogramFrom(daily: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val wi = Window.orderBy(col("day"))
-    val idx = daily.select(col("day"), col("rev_c"))
-      .withColumn("i", row_number().over(wi).cast(LongType))
-      .graftCheckpoint(false)
+    val idx = dayIndexed(daily)
     val st = idx.agg(count(lit(1)).as("n"), sum(col("rev_c")).as("s"))
     val d = idx.crossJoin(broadcast(st))
       .select(col("i"), col("n"),
@@ -977,14 +1056,7 @@ object Temporal {
 
   val q125PeriodogramSql: String = {
     val periods = PeriodogramPeriods.mkString(", ")
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1),
-       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
-       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s
-       |  FROM idx),
-       |d AS (SELECT i, n, n * rev_c - s AS dv FROM idx CROSS JOIN st),
+    s"""WITH $centeredDaysCtesSql,
        |den AS (SELECT SUM(CAST(dv AS HUGEINT) * dv) AS den, CAST(MAX(n) AS BIGINT) AS n
        |  FROM d),
        |fan AS (
@@ -1042,10 +1114,7 @@ object Temporal {
     */
   private[graft] def pageHinkleyPathFrom(daily: DataFrame, refN: Long): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val wi = Window.orderBy(col("day"))
-    val idx = daily.select(col("day"), col("rev_c"))
-      .withColumn("i", row_number().over(wi).cast(LongType))
-      .graftCheckpoint(false)
+    val idx = dayIndexed(daily)
     val ref = idx.filter(col("i") <= refN)
       .agg(sum(col("rev_c")).as("s_ref"), count(lit(1)).as("n_ref"))
     val wc = Window.orderBy(col("i"))
@@ -1079,10 +1148,7 @@ object Temporal {
   }
 
   val q126PageHinkleySql: String =
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1),
+    s"""WITH ${dailyRevenueSql(byStatus = false)},
        |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, day, rev_c FROM daily),
        |ref AS (
        |  SELECT CAST(SUM(rev_c) AS BIGINT) AS s_ref, CAST(COUNT(*) AS BIGINT) AS n_ref
@@ -1136,17 +1202,7 @@ object Temporal {
   // convention (censored-at-t users are still at risk at t).
   // ---------------------------------------------------------------------
   def q130LogRank(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tus"))
-    val u = e.groupBy(col("user_id"))
-      .agg(min(when(col("event_type") === "click", col("tus"))).as("c"),
-        max(col("tus")).as("l"))
-      .filter(col("c").isNotNull)
-    val p = e.filter(col("event_type") === "purchase")
-      .join(u.select(col("user_id"), col("c")), "user_id")
-      .filter(col("tus") >= col("c"))
-      .groupBy(col("user_id")).agg(min(col("tus")).as("pmin"))
-    val dur = u.join(p, Seq("user_id"), "left")
+    val dur = clickToPurchase(spark, dir)
       .select(
         (col("user_id") % lit(2L)).as("grp"),
         expr("(coalesce(pmin, l) - c) div 1000000L").cast(LongType).as("dur_s"),
@@ -1196,19 +1252,7 @@ object Temporal {
   }
 
   val q130LogRankSql: String =
-    """WITH e AS (
-      |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-      |u AS (
-      |  SELECT user_id,
-      |    MIN(CASE WHEN event_type = 'click' THEN tus END) AS c,
-      |    CAST(MAX(tus) AS BIGINT) AS l
-      |  FROM e GROUP BY 1
-      |  HAVING MIN(CASE WHEN event_type = 'click' THEN tus END) IS NOT NULL),
-      |p AS (
-      |  SELECT e.user_id, CAST(MIN(tus) AS BIGINT) AS pmin
-      |  FROM e JOIN u USING (user_id)
-      |  WHERE event_type = 'purchase' AND tus >= c
-      |  GROUP BY 1),
+    s"""WITH $clickPurchaseCtesSql,
       |dur AS (
       |  SELECT user_id % 2 AS grp,
       |    CAST((COALESCE(pmin, l) - c) // 1000000 AS BIGINT) AS dur_s,
@@ -1336,30 +1380,7 @@ object Temporal {
   }
 
   val q133DurbinWatsonSql: String =
-    """WITH daily AS (
-      |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1, 2),
-      |idx AS (
-      |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
-      |  FROM daily),
-      |st AS (
-      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(i) AS BIGINT) AS si,
-      |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(i * i) AS BIGINT) AS sii,
-      |    SUM(CAST(i AS HUGEINT) * rev_c) AS siy
-      |  FROM idx GROUP BY 1
-      |  HAVING COUNT(*) >= 3),
-      |vd AS (
-      |  SELECT grp, n, si, sy,
-      |    CAST(sii AS HUGEINT) * n - CAST(si AS HUGEINT) * si AS v,
-      |    siy * n - CAST(si AS HUGEINT) * sy AS nm
-      |  FROM st),
-      |r AS (
-      |  SELECT grp, i,
-      |    CAST(floor(CAST(CAST(rev_c AS HUGEINT) * v * n - v * sy + nm * si
-      |        - nm * n * i AS DOUBLE)
-      |      / CAST(v * n AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS r3
-      |  FROM idx JOIN vd USING (grp)),
+    s"""WITH ${olsResidualCtesSql("grp, i")},
       |l AS (
       |  SELECT grp, r3, LAG(r3) OVER (PARTITION BY grp ORDER BY i) AS pr3
       |  FROM r),
@@ -1448,35 +1469,8 @@ object Temporal {
   }
 
   val q136BreuschPaganSql: String =
-    """WITH daily AS (
-      |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1, 2),
-      |idx AS (
-      |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
-      |  FROM daily),
-      |st AS (
-      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(i) AS BIGINT) AS si,
-      |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(i * i) AS BIGINT) AS sii,
-      |    SUM(CAST(i AS HUGEINT) * rev_c) AS siy
-      |  FROM idx GROUP BY 1
-      |  HAVING COUNT(*) >= 3),
-      |vd AS (
-      |  SELECT grp, n, si, sy,
-      |    CAST(sii AS HUGEINT) * n - CAST(si AS HUGEINT) * si AS v,
-      |    siy * n - CAST(si AS HUGEINT) * sy AS nm
-      |  FROM st),
-      |r AS (
-      |  SELECT grp, i, n,
-      |    CAST(floor(CAST(CAST(rev_c AS HUGEINT) * v * n - v * sy + nm * si
-      |        - nm * n * i AS DOUBLE)
-      |      / CAST(v * n AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS r3
-      |  FROM idx JOIN vd USING (grp)),
-      |ss AS (
-      |  SELECT grp, SUM(CAST(r3 AS HUGEINT) * r3) AS ss2,
-      |    CAST(MAX(n) AS BIGINT) AS nn
-      |  FROM r GROUP BY 1
-      |  HAVING SUM(CAST(r3 AS HUGEINT) * r3) > 0),
+    s"""WITH ${olsResidualCtesSql("grp, i, n")},
+      |$residualSsCteSql,
       |z AS (
       |  SELECT r.grp, r.i, ss.nn AS n,
       |    CAST(floor(CAST(r3 AS DOUBLE)
@@ -1556,35 +1550,8 @@ object Temporal {
   }
 
   val q137JarqueBeraSql: String =
-    """WITH daily AS (
-      |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1, 2),
-      |idx AS (
-      |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
-      |  FROM daily),
-      |st AS (
-      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(i) AS BIGINT) AS si,
-      |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(i * i) AS BIGINT) AS sii,
-      |    SUM(CAST(i AS HUGEINT) * rev_c) AS siy
-      |  FROM idx GROUP BY 1
-      |  HAVING COUNT(*) >= 3),
-      |vd AS (
-      |  SELECT grp, n, si, sy,
-      |    CAST(sii AS HUGEINT) * n - CAST(si AS HUGEINT) * si AS v,
-      |    siy * n - CAST(si AS HUGEINT) * sy AS nm
-      |  FROM st),
-      |r AS (
-      |  SELECT grp, i, n,
-      |    CAST(floor(CAST(CAST(rev_c AS HUGEINT) * v * n - v * sy + nm * si
-      |        - nm * n * i AS DOUBLE)
-      |      / CAST(v * n AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS r3
-      |  FROM idx JOIN vd USING (grp)),
-      |ss AS (
-      |  SELECT grp, SUM(CAST(r3 AS HUGEINT) * r3) AS ss2,
-      |    CAST(MAX(n) AS BIGINT) AS nn
-      |  FROM r GROUP BY 1
-      |  HAVING SUM(CAST(r3 AS HUGEINT) * r3) > 0),
+    s"""WITH ${olsResidualCtesSql("grp, i, n")},
+      |$residualSsCteSql,
       |z AS (
       |  SELECT r.grp, ss.nn AS n,
       |    CAST(floor(CAST(r3 AS DOUBLE)
@@ -1667,35 +1634,8 @@ object Temporal {
   }
 
   val q138ArchLmSql: String =
-    """WITH daily AS (
-      |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1, 2),
-      |idx AS (
-      |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
-      |  FROM daily),
-      |st AS (
-      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(i) AS BIGINT) AS si,
-      |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(i * i) AS BIGINT) AS sii,
-      |    SUM(CAST(i AS HUGEINT) * rev_c) AS siy
-      |  FROM idx GROUP BY 1
-      |  HAVING COUNT(*) >= 3),
-      |vd AS (
-      |  SELECT grp, n, si, sy,
-      |    CAST(sii AS HUGEINT) * n - CAST(si AS HUGEINT) * si AS v,
-      |    siy * n - CAST(si AS HUGEINT) * sy AS nm
-      |  FROM st),
-      |r AS (
-      |  SELECT grp, i, n,
-      |    CAST(floor(CAST(CAST(rev_c AS HUGEINT) * v * n - v * sy + nm * si
-      |        - nm * n * i AS DOUBLE)
-      |      / CAST(v * n AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS r3
-      |  FROM idx JOIN vd USING (grp)),
-      |ss AS (
-      |  SELECT grp, SUM(CAST(r3 AS HUGEINT) * r3) AS ss2,
-      |    CAST(MAX(n) AS BIGINT) AS nn
-      |  FROM r GROUP BY 1
-      |  HAVING SUM(CAST(r3 AS HUGEINT) * r3) > 0),
+    s"""WITH ${olsResidualCtesSql("grp, i, n")},
+      |$residualSsCteSql,
       |z AS (
       |  SELECT r.grp, r.i,
       |    CAST(floor(CAST(r3 AS DOUBLE)
@@ -1809,13 +1749,7 @@ object Temporal {
 
   val q139HurstSql: String = {
     val sizes = HurstSizes.mkString(", ")
-    s"""WITH daily AS (
-       |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1, 2),
-       |idx AS (
-       |  SELECT grp, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY day) AS i, rev_c
-       |  FROM daily),
+    s"""WITH $statusDayIndexCtesSql,
        |sized AS (
        |  SELECT grp, i, rev_c, m, (i - 1) // m AS b
        |  FROM idx CROSS JOIN (SELECT CAST(unnest([$sizes]) AS BIGINT) AS m)),
@@ -1944,24 +1878,7 @@ object Temporal {
     val rows = (1 to L).map(k =>
       s"SELECT CAST($k AS BIGINT) AS lag, ROUND(r_$k, 6) AS acf, " +
         s"ROUND(p_${k}_$k, 6) AS pacf FROM cj$L").mkString("\nUNION ALL ")
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1),
-       |idx AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, rev_c FROM daily),
-       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s
-       |  FROM idx),
-       |d AS (SELECT i, n, n * rev_c - s AS dv FROM idx CROSS JOIN st),
-       |den AS (SELECT SUM(CAST(dv AS HUGEINT) * dv) AS den FROM d),
-       |num AS (
-       |  SELECT a.i - b.i AS lag, SUM(CAST(a.dv AS HUGEINT) * b.dv) AS num,
-       |    CAST(MAX(a.n) AS BIGINT) AS n
-       |  FROM d a JOIN d b ON b.i < a.i AND a.i - b.i <= $L
-       |  GROUP BY 1),
-       |r AS (
-       |  SELECT lag, n,
-       |    CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS r9
-       |  FROM num CROSS JOIN den),
+    s"""WITH ${acfCtesSql(L)},
        |$sb
        |$rows
        |ORDER BY lag""".stripMargin
@@ -1994,17 +1911,8 @@ object Temporal {
   // ---------------------------------------------------------------------
   private[operators] val CcfMaxLag = 7
 
-  def q142Ccf(spark: SparkSession, dir: String): DataFrame = {
-    val x = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day")).agg(sum(col("pc")).as("x_c"))
-    val y = Tables.lineitem(spark, dir)
-      .select(to_date(col("l_shipdate")).as("day"),
-        floor(col("l_quantity") * lit(100.0) + lit(0.5)).cast(LongType).as("qc"))
-      .groupBy(col("day")).agg(sum(col("qc")).as("y_c"))
-    ccfFrom(x.join(y, "day"))
-  }
+  def q142Ccf(spark: SparkSession, dir: String): DataFrame =
+    ccfFrom(pairedDaily(spark, dir))
 
   /** CCF over any (day: DATE, x_c: BIGINT, y_c: BIGINT) paired daily
     * series — spec entry point.
@@ -2047,14 +1955,7 @@ object Temporal {
   }
 
   val q142CcfSql: String =
-    s"""WITH x AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x_c
-       |  FROM orders GROUP BY 1),
-       |y AS (
-       |  SELECT CAST(l_shipdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS y_c
-       |  FROM lineitem GROUP BY 1),
+    s"""WITH $pairedDailySql,
        |idx AS (
        |  SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x_c, y_c
        |  FROM x JOIN y USING (day)),
@@ -2141,10 +2042,7 @@ object Temporal {
   }
 
   val q144DickeyFullerSql: String =
-    """WITH daily AS (
-      |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-      |  FROM orders GROUP BY 1, 2),
+    s"""WITH ${dailyRevenueSql(byStatus = true)},
       |p AS (
       |  SELECT grp,
       |    LAG(rev_c) OVER (PARTITION BY grp ORDER BY day) AS xl,
@@ -2201,17 +2099,8 @@ object Temporal {
   // guarded NULL on collinear regressors (r12² = 1) or a saturated fit
   // (R²_u ≥ 1 on the nano grid) — the t86/t88 convention.
   // ---------------------------------------------------------------------
-  def q145Granger(spark: SparkSession, dir: String): DataFrame = {
-    val x = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day")).agg(sum(col("pc")).as("x_c"))
-    val y = Tables.lineitem(spark, dir)
-      .select(to_date(col("l_shipdate")).as("day"),
-        floor(col("l_quantity") * lit(100.0) + lit(0.5)).cast(LongType).as("qc"))
-      .groupBy(col("day")).agg(sum(col("qc")).as("y_c"))
-    grangerFrom(x.join(y, "day"))
-  }
+  def q145Granger(spark: SparkSession, dir: String): DataFrame =
+    grangerFrom(pairedDaily(spark, dir))
 
   /** Order-1 Granger F per direction over any (day: DATE, x_c, y_c)
     * paired daily series — spec entry point.
@@ -2271,14 +2160,7 @@ object Temporal {
   }
 
   val q145GrangerSql: String =
-    """WITH x AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x_c
-      |  FROM orders GROUP BY 1),
-      |y AS (
-      |  SELECT CAST(l_shipdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS y_c
-      |  FROM lineitem GROUP BY 1),
+    s"""WITH $pairedDailySql,
       |lagged AS (
       |  SELECT x_c, y_c,
       |    LAG(x_c) OVER (ORDER BY day) AS xl,
@@ -2401,10 +2283,7 @@ object Temporal {
   }
 
   val q146KpssSql: String =
-    s"""WITH daily AS (
-       |  SELECT o_orderstatus AS grp, CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
-       |  FROM orders GROUP BY 1, 2),
+    s"""WITH ${dailyRevenueSql(byStatus = true)},
        |st AS (
        |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(rev_c) AS BIGINT) AS s
        |  FROM daily GROUP BY 1),
@@ -2463,17 +2342,8 @@ object Temporal {
   // snapped residuals is [[dickeyFullerFrom]] verbatim, so the
   // augmenting machinery and its guards are shared, not re-derived.
   // ---------------------------------------------------------------------
-  def q147EngleGranger(spark: SparkSession, dir: String): DataFrame = {
-    val x = Tables.orders(spark, dir)
-      .select(to_date(col("o_orderdate")).as("day"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast(LongType).as("pc"))
-      .groupBy(col("day")).agg(sum(col("pc")).as("x_c"))
-    val y = Tables.lineitem(spark, dir)
-      .select(to_date(col("l_shipdate")).as("day"),
-        floor(col("l_quantity") * lit(100.0) + lit(0.5)).cast(LongType).as("qc"))
-      .groupBy(col("day")).agg(sum(col("qc")).as("y_c"))
-    engleGrangerFrom(x.join(y, "day"))
-  }
+  def q147EngleGranger(spark: SparkSession, dir: String): DataFrame =
+    engleGrangerFrom(pairedDaily(spark, dir))
 
   /** Engle-Granger over any (day: DATE, x_c, y_c) paired daily series —
     * spec entry point.
@@ -2507,14 +2377,7 @@ object Temporal {
   }
 
   val q147EngleGrangerSql: String =
-    """WITH x AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x_c
-      |  FROM orders GROUP BY 1),
-      |y AS (
-      |  SELECT CAST(l_shipdate AS DATE) AS day,
-      |    CAST(SUM(CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS y_c
-      |  FROM lineitem GROUP BY 1),
+    s"""WITH $pairedDailySql,
       |j AS (SELECT day, x_c, y_c FROM x JOIN y USING (day)),
       |st AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,

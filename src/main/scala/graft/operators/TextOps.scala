@@ -800,16 +800,22 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
-  val t61LmScoreSql: String =
-    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+  /** (doc_id, w1, w2): every adjacent token pair of each document. */
+  private val docBigramsCtesSql: String =
+    s"""tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
        |pr AS (
        |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
        |    i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS g
        |  FROM tk),
        |pairs AS (
        |  SELECT doc_id, struct_extract(g, 'w1') AS w1, struct_extract(g, 'w2') AS w2
-       |  FROM pr),
-       |vocab AS (
+       |  FROM pr)""".stripMargin
+
+  /** t61's add-one bigram `model` (w1, w2, lp_n) over `pairs`, with
+    * `vocab` its vocabulary size; Curation's DoReMi reuses it.
+    */
+  private[operators] val addOneBigramModelCtesSql: String =
+    s"""vocab AS (
        |  SELECT COUNT(DISTINCT w) AS v FROM (
        |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)),
        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
@@ -819,7 +825,11 @@ object TextOps {
        |    CAST(floor(ln(CAST(c2 + 1 AS DOUBLE)
        |      / CAST(c1 + (SELECT v FROM vocab) AS DOUBLE)) * 1000000000.0 + 0.5)
        |      AS BIGINT) AS lp_n
-       |  FROM c2 JOIN c1 ON c2.w1 = c1.w1),
+       |  FROM c2 JOIN c1 ON c2.w1 = c1.w1)""".stripMargin
+
+  val t61LmScoreSql: String =
+    s"""WITH $docBigramsCtesSql,
+       |$addOneBigramModelCtesSql,
        |scored AS (
        |  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(lp_n) AS sum_n
        |  FROM pairs JOIN model USING (w1, w2) GROUP BY doc_id)
@@ -2067,6 +2077,44 @@ object TextOps {
   private def sigmoidN9Sql(z: String): String =
     s"CAST(floor(1.0 / (1.0 + exp(-($z))) * 1000000000.0 + 0.5) AS BIGINT)"
 
+  /** The gate oracles' `f` CTE: each document's t74 feature vector. */
+  private val qcFeaturesCteSql: String =
+    s"""f AS (
+       |  SELECT doc_id,
+       |${QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")}
+       |  FROM documents)""".stripMargin
+
+  /** `sc`: each document's learned-gate score in nano-units, from `f`. */
+  private val qcScoreCteSql: String =
+    s"""sc AS (
+       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
+       |  FROM f)""".stripMargin
+
+  /** t82's per-document rule counts as one CTE named `cte`. */
+  private def gopherCountsSql(cte: String): String =
+    s"""$cte AS (
+       |  SELECT doc_id,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
+       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
+       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
+       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
+       |    ${langScoreSql("en")} AS n_stop
+       |  FROM documents)""".stripMargin
+
+  /** `gm` (t82's rule counts) and `lab` (`cols` plus t82's pass bit). */
+  private def gopherLabCtesSql(cols: String): String =
+    s"""${gopherCountsSql("gm")},
+       |lab AS (
+       |  SELECT $cols,
+       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
+       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
+       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
+       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
+       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
+       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
+       |  FROM gm)""".stripMargin
+
   /** Scored-but-unsorted form: runs on batch OR stream (Append mode —
     * no state, no watermark needed).
     */
@@ -2081,11 +2129,7 @@ object TextOps {
     qualityScoresFrom(docs(spark, dir)).orderBy(col("doc_id"))
 
   val t75QualityClassifierSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
+    s"""WITH $qcFeaturesCteSql,
        |z AS (
        |  SELECT *, ${qcMarginSql(QcWeights, QcBias)} AS z FROM f)
        |SELECT doc_id, ${QcFeatures.mkString(", ")}, z,
@@ -2234,16 +2278,9 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
-  val t77KnLmScoreSql: String =
-    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |pr AS (
-       |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-       |    i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS g
-       |  FROM tk),
-       |pairs AS (
-       |  SELECT doc_id, struct_extract(g, 'w1') AS w1, struct_extract(g, 'w2') AS w2
-       |  FROM pr),
-       |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
+  /** t77's interpolated Kneser-Ney bigram `model` (w1, w2, lp_n) over `pairs`. */
+  private val knBigramModelCtesSql: String =
+    s"""c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
        |c1f AS (
        |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1, COUNT(*) AS n1fwd
        |  FROM c2 GROUP BY w1),
@@ -2256,7 +2293,11 @@ object TextOps {
        |        + ($KnDiscount * CAST(n1fwd AS DOUBLE) / CAST(c1 AS DOUBLE))
        |          * (CAST(n1bwd AS DOUBLE) / CAST(bt AS DOUBLE))
        |    ) * 1000000000.0 + 0.5) AS BIGINT) AS lp_n
-       |  FROM c2 JOIN c1f USING (w1) JOIN n1b USING (w2) CROSS JOIN bt),
+       |  FROM c2 JOIN c1f USING (w1) JOIN n1b USING (w2) CROSS JOIN bt)""".stripMargin
+
+  val t77KnLmScoreSql: String =
+    s"""WITH $docBigramsCtesSql,
+       |$knBigramModelCtesSql,
        |scored AS (
        |  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(lp_n) AS sum_n
        |  FROM pairs JOIN model USING (w1, w2) GROUP BY doc_id)
@@ -2306,20 +2347,7 @@ object TextOps {
        |  SELECT doc_id, lang,
        |    struct_extract(g, 'w1') AS w1, struct_extract(g, 'w2') AS w2
        |  FROM pr),
-       |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
-       |c1f AS (
-       |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1, COUNT(*) AS n1fwd
-       |  FROM c2 GROUP BY w1),
-       |n1b AS (SELECT w2, COUNT(*) AS n1bwd FROM c2 GROUP BY w2),
-       |bt AS (SELECT COUNT(*) AS bt FROM c2),
-       |model AS (
-       |  SELECT c2.w1, c2.w2,
-       |    CAST(floor(ln(
-       |      GREATEST(CAST(c2 AS DOUBLE) - $KnDiscount, 0.0) / CAST(c1 AS DOUBLE)
-       |        + ($KnDiscount * CAST(n1fwd AS DOUBLE) / CAST(c1 AS DOUBLE))
-       |          * (CAST(n1bwd AS DOUBLE) / CAST(bt AS DOUBLE))
-       |    ) * 1000000000.0 + 0.5) AS BIGINT) AS lp_n
-       |  FROM c2 JOIN c1f USING (w1) JOIN n1b USING (w2) CROSS JOIN bt),
+       |$knBigramModelCtesSql,
        |scored AS (
        |  SELECT doc_id, lang, COUNT(*) AS n_bigrams, SUM(lp_n) AS sum_n
        |  FROM pairs JOIN model USING (w1, w2) GROUP BY doc_id, lang),
@@ -2388,15 +2416,7 @@ object TextOps {
   }
 
   val t82GopherRulesSql: String =
-    s"""WITH m AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents)
+    s"""WITH ${gopherCountsSql("m")}
        |SELECT doc_id, n_words,
        |  ROUND(sum_len / CAST(n_words AS DOUBLE), 6) AS mean_word_len,
        |  CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END AS r_word_count,
@@ -2614,32 +2634,9 @@ object TextOps {
   }
 
   val t85CalibrationSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
+       |${gopherLabCtesSql("doc_id")},
        |g AS (
        |  SELECT LEAST(score_n9 * $CalibBuckets // 1000000000, ${CalibBuckets - 1}) AS bucket,
        |    COUNT(*) AS n_docs,
@@ -2746,32 +2743,9 @@ object TextOps {
   }
 
   val t86RocAucSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
+       |${gopherLabCtesSql("doc_id")},
        |g AS (
        |  SELECT score_n9, COUNT(*) AS n, CAST(SUM(pass) AS BIGINT) AS np
        |  FROM sc JOIN lab USING (doc_id)
@@ -2864,33 +2838,12 @@ object TextOps {
   }
 
   val t87GateAgreementSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
+    s"""WITH $qcFeaturesCteSql,
        |sc AS (
        |  SELECT doc_id,
        |    CASE WHEN ${qcMarginSql(QcWeights, QcBias)} >= 0 THEN 1 ELSE 0 END AS keep
        |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+       |${gopherLabCtesSql("doc_id")},
        |cells AS (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
        |    CAST(SUM(keep * pass) AS BIGINT) AS n11,
@@ -2971,32 +2924,9 @@ object TextOps {
   }
 
   val t88AveragePrecisionSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
+       |${gopherLabCtesSql("doc_id")},
        |g AS (
        |  SELECT score_n9, COUNT(*) AS n, CAST(SUM(pass) AS BIGINT) AS np
        |  FROM sc JOIN lab USING (doc_id)
@@ -3156,32 +3086,9 @@ object TextOps {
   }
 
   val t90HosmerLemeshowSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
+       |${gopherLabCtesSql("doc_id")},
        |g AS (
        |  SELECT LEAST(score_n9 * $CalibBuckets // 1000000000, ${CalibBuckets - 1}) AS bucket,
        |    CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3280,14 +3187,8 @@ object TextOps {
   }
 
   val t91FriedmanSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
        |cells AS (
        |  SELECT d.source, d.lang, CAST(SUM(sc.score_n9) AS BIGINT) AS s9,
        |    CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3432,33 +3333,12 @@ object TextOps {
   }
 
   val c88GateFunnelSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
+    s"""WITH $qcFeaturesCteSql,
        |sc AS (
        |  SELECT doc_id,
        |    CAST(${qcMarginSql(QcWeights, QcBias)} >= 0 AS BIGINT) AS keep
        |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id, n_words,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+       |${gopherLabCtesSql("doc_id, n_words")},
        |base AS (
        |  SELECT doc_id, source, md5(text) AS h FROM documents),
        |keeper AS (SELECT h, MIN(doc_id) AS kid FROM base GROUP BY 1),
@@ -3546,33 +3426,12 @@ object TextOps {
   }
 
   val t94CochranQSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
+    s"""WITH $qcFeaturesCteSql,
        |sc AS (
        |  SELECT doc_id,
        |    CAST(${qcMarginSql(QcWeights, QcBias)} >= 0 AS BIGINT) AS keep
        |  FROM f),
-       |gm AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS sum_len,
-       |    CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-       |    CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_ell,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-       |    ${langScoreSql("en")} AS n_stop
-       |  FROM documents),
-       |lab AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 3 * n_words <= sum_len AND sum_len <= 10 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_hash <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 10 * n_ell <= n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN 5 * n_alpha >= 4 * n_words THEN 1 ELSE 0 END)
-       |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS pass
-       |  FROM gm),
+       |${gopherLabCtesSql("doc_id")},
        |base AS (
        |  SELECT doc_id, source, md5(text) AS h FROM documents),
        |keeper AS (SELECT h, MIN(doc_id) AS kid FROM base GROUP BY 1),
@@ -3823,14 +3682,8 @@ object TextOps {
   }
 
   val t97KendallWSql: String = {
-    val featCols = QcFeatures.map(f => s"    ${qcFeatureSqls(f)} AS $f").mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id,
-       |$featCols
-       |  FROM documents),
-       |sc AS (
-       |  SELECT doc_id, ${sigmoidN9Sql(qcMarginSql(QcWeights, QcBias))} AS score_n9
-       |  FROM f),
+    s"""WITH $qcFeaturesCteSql,
+       |$qcScoreCteSql,
        |cells AS (
        |  SELECT d.source, d.lang, CAST(SUM(sc.score_n9) AS BIGINT) AS s9,
        |    CAST(COUNT(*) AS BIGINT) AS cnt

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.functions.FlatJsonTuple
 
 /** Stream sources. The reference ingests JSON `{readTag_id, readValue}`
@@ -104,9 +105,6 @@ object Sources {
     * Tables.events; [[eventsStreamFrom]] branches on what it finds.
     */
   private def rawEventsSchema(spark: SparkSession, glob: String): StructType = {
-    // nanosAsLong is session-wide on purpose: the streaming scan that
-    // later reads these files resolves footer types under the same conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // an empty glob at stream-DEFINITION time (source dir populated after
     // start — the normal file-stream deployment) must not be fatal: fall
     // back to the explicit events layout (ADVICE r09). ONLY the two
@@ -158,17 +156,9 @@ object Sources {
   def eventsStreamFrom(spark: SparkSession, glob: String,
                        maxFilesPerTrigger: Int = 1): DataFrame = {
     val onDisk = rawEventsSchema(spark, glob)
-    val raw = spark.readStream
+    Tables.withMicrosTs(spark.readStream
       .schema(onDisk)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(glob)
-    onDisk("ts").dataType match {
-      case LongType =>
-        // integer division (`div`): long/1000 via `/` casts through double
-        // and loses low bits above 2^53 — see Tables.events
-        raw.withColumn("ts", timestamp_micros(expr("CAST(ts AS BIGINT) div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+      .parquet(glob))
   }
 }
